@@ -10,8 +10,10 @@ Two implementations with identical semantics (property-tested equal):
   (scan → flatMap → hash shuffle → group → reduce); Python rides the
   whole path, so this is the semantic-fidelity mode, not the fast path.
 - ``run_mapreduce_df``: DataFrame form — mapInPandas (vectorized
-  UDTF ≙ mapf) → repartition(n, key) → applyInPandas (full-list UDAF
-  ≙ reducef). Arrow-batched; preferred of the two.
+  UDTF ≙ mapf) → groupBy(key).applyInPandas (full-list UDAF ≙
+  reducef). Arrow-batched; preferred of the two. The grouping's own
+  hash exchange is the shuffle, so AQE sizes the reduce side from the
+  shuffle bytes instead of a fixed nReduce.
 
 Both deliberately preserve the reference's full-list reduce semantics:
 the UDAF sees EVERY value for its key materialized (no combiner, not
@@ -61,7 +63,6 @@ def run_mapreduce_df(
     inputs: DataFrame,
     mapf: MapF,
     reducef: ReduceF,
-    n_reduce: int = 10,
 ) -> DataFrame:
     """DataFrame/Arrow-form MapReduce (same contract, vectorized
     transport)."""
@@ -81,11 +82,7 @@ def run_mapreduce_df(
         return pd.DataFrame({"key": [k], "value": [reducef(k, pdf["value"].tolist())]})
 
     kv = inputs.mapInPandas(do_map, schema=KV_SCHEMA)
-    return (
-        kv.repartition(n_reduce, "key")
-        .groupBy("key")
-        .applyInPandas(do_reduce, schema=KV_SCHEMA)
-    )
+    return kv.groupBy("key").applyInPandas(do_reduce, schema=KV_SCHEMA)
 
 
 def save_text_kv(df: DataFrame, path: str) -> None:

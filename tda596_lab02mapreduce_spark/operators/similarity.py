@@ -291,6 +291,15 @@ def _model_cache_dir() -> str:
     return os.environ.get("SPARK_GRAFT_MODEL_DIR", default)
 
 
+def _sidecar_path(prefix: str, key: tuple) -> str:
+    import os
+
+    return os.path.join(
+        _model_cache_dir(),
+        prefix + "_" + hashlib.sha256(repr(key).encode()).hexdigest()[:16] + ".json",
+    )
+
+
 def ivf_fit(
     corpus: DataFrame,
     *,
@@ -314,12 +323,7 @@ def ivf_fit(
     if dataset_key is not None and not refit:
         if key in _IVF_MODEL_CACHE:
             return _IVF_MODEL_CACHE[key]
-        path = os.path.join(
-            _model_cache_dir(),
-            "ivf_"
-            + hashlib.sha256(repr(key).encode()).hexdigest()[:16]
-            + ".json",
-        )
+        path = _sidecar_path("ivf", key)
         if os.path.exists(path):
             with open(path) as f:
                 model = [(int(c), [float(x) for x in v]) for c, v in json.load(f)]
@@ -336,14 +340,8 @@ def ivf_fit(
     model = [(int(r["cell"]), list(r["centroid"])) for r in cents.collect()]
     if dataset_key is not None:
         _IVF_MODEL_CACHE[key] = model
-        cache_dir = _model_cache_dir()
-        os.makedirs(cache_dir, exist_ok=True)
-        path = os.path.join(
-            cache_dir,
-            "ivf_"
-            + hashlib.sha256(repr(key).encode()).hexdigest()[:16]
-            + ".json",
-        )
+        os.makedirs(_model_cache_dir(), exist_ok=True)
+        path = _sidecar_path("ivf", key)
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(model, f)
@@ -625,10 +623,7 @@ def pq_fit(
     import numpy as np
 
     key = (dataset_key, vec_col, id_col, m, k, iters, n_train)
-    path = os.path.join(
-        _model_cache_dir(),
-        "pq_" + hashlib.sha256(repr(key).encode()).hexdigest()[:16] + ".json",
-    )
+    path = _sidecar_path("pq", key)
     if dataset_key is not None and not refit:
         if key in _PQ_MODEL_CACHE:
             return _PQ_MODEL_CACHE[key]
@@ -863,10 +858,7 @@ def _load_sidecar(prefix: str, key: tuple):
     import json
     import os
 
-    path = os.path.join(
-        _model_cache_dir(),
-        prefix + "_" + hashlib.sha256(repr(key).encode()).hexdigest()[:16] + ".json",
-    )
+    path = _sidecar_path(prefix, key)
     if not os.path.exists(path):
         raise FileNotFoundError(
             f"canonical {prefix} model sidecar missing: {path} — run the "

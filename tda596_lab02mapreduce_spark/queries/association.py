@@ -625,6 +625,7 @@ def kcore_peel_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
         # with identical plan truncation. Fresh-JVM A/B at sf0.1
         # (bench's isolated protocol, 3 cold runs each): eager
         # 3.89/3.48/3.50 s vs lazy 3.42/3.09/3.40 s — lazy 3/3.
+        # invariant: the first action on a lazy checkpoint must compute all partitions
         e = (
             e.join(ds.select("src"), "src")
             .join(dd.select("dst"), "dst")
@@ -993,19 +994,20 @@ def _copurchase_edges(
     # instead of two, and the per-pair struct allocation disappears
     # from the emission loop. Measured at sf0.1 (warmed in-session A/B,
     # 2 rounds): pair count 3.16→2.96 s and 3.06→2.54 s. The pack is
-    # exact only while every partkey < 2^31; since pks is sorted
-    # ascending and x < y within a pair, guarding y alone covers both —
-    # a catalog past 2^31 parts raises loudly (the _EXACT_KEY_MAX_N
-    # discipline) instead of silently colliding.
+    # exact only while every partkey is in [0, 2^31); since pks is
+    # sorted ascending and x < y within a pair, guarding y from above
+    # and x from below covers both — a catalog past 2^31 parts or a
+    # negative key raises loudly (the _EXACT_KEY_MAX_N discipline)
+    # instead of silently colliding.
     pairs = per_cust.repartition(max(8, par // 4)).select(
         F.explode(
             F.expr(
                 "flatten(transform(pks, (x, i) -> "
                 "transform(slice(pks, i + 2, size(pks)), "
-                "y -> CASE WHEN y >= 2147483648 THEN "
-                "CAST(raise_error('_copurchase_edges: partkey >= 2^31 "
-                "overflows the packed pair key — widen the pack before "
-                "scaling the catalog past 2^31 parts') AS BIGINT) "
+                "y -> CASE WHEN y >= 2147483648 OR x < 0 THEN "
+                "CAST(raise_error('_copurchase_edges: partkey outside "
+                "[0, 2^31) does not fit the packed pair key — widen the "
+                "pack before admitting such keys') AS BIGINT) "
                 "ELSE shiftleft(CAST(x AS BIGINT), 32) + y END)))"
             )
         ).alias("pp")

@@ -125,7 +125,7 @@ def stream_dedup_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_dedup(events_stream(spark, sf_dir, copies=2)),
         "q_stream_dedup_ids",
         output_mode="append",
-        src_bytes=2 * source_bytes(sf_dir),
+        src_bytes=source_bytes(sf_dir, copies=2),
     )
     return drained.select("event_id")
 
@@ -1606,7 +1606,7 @@ def stream_nb_model_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the per-batch confusion rollup is classes²-bounded either way
     from tda596_lab02mapreduce_spark.streaming.windows import drain_conf
 
-    with drain_conf(spark, 2 * source_bytes(sf_dir, "documents")):
+    with drain_conf(spark, source_bytes(sf_dir, "documents", copies=2)):
         q = (
             stream.writeStream.foreachBatch(handler)
             .queryName("q_stream_nb_model_swap")

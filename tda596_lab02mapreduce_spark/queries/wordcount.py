@@ -110,7 +110,7 @@ GROUP BY word
     doc=(
         "Word count through the generic MapReduce façade (mapreduce.py): the "
         "reference's EXACT mapf/reducef plugin contract (mr/worker.go:36-37, "
-        "mrapps/wc.go) run as mapInPandas → repartition(key) → applyInPandas "
+        "mrapps/wc.go) run as mapInPandas → groupBy(key).applyInPandas "
         "with full-list reduce semantics, untyped string KV output and all. "
         "Oracle-checked equal to the tokenizer SQL — proving the façade, the "
         "Python tokenizer (apps.py), and the Catalyst-native wordcount query "
@@ -127,6 +127,4 @@ def mapreduce_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("string").alias("filename"),
         F.col("text").alias("contents"),
     )
-    return mapreduce.run_mapreduce_df(
-        spark, docs, apps.wc_map, apps.wc_reduce, n_reduce=16
-    )
+    return mapreduce.run_mapreduce_df(spark, docs, apps.wc_map, apps.wc_reduce)

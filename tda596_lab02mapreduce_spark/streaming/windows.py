@@ -19,6 +19,7 @@ from __future__ import annotations
 import hashlib
 import os
 import tempfile
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -257,17 +258,28 @@ def record_drain(query_name: str, q) -> None:
     }
 
 
-def source_bytes(sf_dir: str, table: str = "events") -> int:
-    """On-disk bytes of the fixture table feeding a drain — the input
-    proxy ``drain_conf`` sizes the state store from."""
+def source_bytes(
+    sf_dir: str, table: str = "events", *, copies: int = 1
+) -> int | None:
+    """On-disk bytes of the fixture table feeding a drain (times the
+    ``copies`` the stream replays it) — the input proxy ``drain_conf``
+    sizes the state store from. ``None`` when the size is unknown: a
+    missing path or a non-local URI (an object store is not stat-ed
+    here), which leaves the session's setting in force."""
     import glob
+    from urllib.parse import urlparse
 
-    p = os.path.join(sf_dir, f"{table}.parquet")
+    uri = urlparse(sf_dir)
+    if uri.scheme not in ("", "file"):
+        return None
+    p = os.path.join(uri.path if uri.scheme else sf_dir, f"{table}.parquet")
     if os.path.isdir(p):
-        return sum(
-            os.path.getsize(f) for f in glob.glob(os.path.join(p, "*.parquet"))
-        )
-    return os.path.getsize(p)
+        n = sum(os.path.getsize(f) for f in glob.glob(os.path.join(p, "*.parquet")))
+    elif os.path.isfile(p):
+        n = os.path.getsize(p)
+    else:
+        return None
+    return copies * n
 
 
 # bytes of drain input per state-store partition: state rows are
@@ -292,9 +304,12 @@ class drain_conf:
     the cluster's setting. Batch counts, watermark semantics, and
     per-key grouping are partition-count-independent, so drained
     results are unchanged (the batch-boundary oracles stay green).
-    Env override: SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS. The streaming
-    query CLONES the session conf at start, so restoring the value
-    after the drain cannot affect the finished query."""
+    Env override: SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS, a positive
+    integer; any other value warns and falls back to the derived size.
+    The streaming query CLONES the session conf at start, so restoring
+    the value after the drain cannot affect the finished query. The
+    setting is session-global while the drain starts: it assumes one
+    thread plans on the session at a time."""
 
     def __init__(self, spark, n_bytes: int | None):
         self._spark = spark
@@ -303,6 +318,15 @@ class drain_conf:
 
     def __enter__(self):
         env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
+        if env and not (env.isascii() and env.isdigit() and int(env) >= 1):
+            warnings.warn(
+                f"SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS={env!r} is not a "
+                "positive integer; ignoring it and sizing the drain from "
+                "its input bytes",
+                RuntimeWarning,
+                stacklevel=2,
+            )
+            env = None
         if env:
             parts: int | None = int(env)
         elif self._bytes is None:

@@ -5,9 +5,11 @@ test against mrsequential (main/test-mr.sh:81-111)."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
-from tda596_lab02mapreduce_spark import apps, io
+from tda596_lab02mapreduce_spark import apps, io, plans
 from tda596_lab02mapreduce_spark.functions.text import tokens_nonempty
 from tda596_lab02mapreduce_spark.mapreduce import (
     run_mapreduce,
@@ -87,6 +89,48 @@ def test_partition_invariance(spark, sf_smoke):
         ).collect()
     }
     assert one == many
+
+
+def test_df_partition_invariance(spark, sf_smoke):
+    """The DataFrame form has no reducer count of its own: its results
+    must not depend on the input layout nor on the shuffle partition
+    count the planner sizes the reduce side from."""
+    inputs = _inputs(spark, sf_smoke)
+
+    def run(df):
+        return {
+            (r.key, r.value)
+            for r in run_mapreduce_df(spark, df, apps.wc_map, apps.wc_reduce).collect()
+        }
+
+    want = run(inputs.repartition(1))
+    assert want
+    assert run(inputs.repartition(16)) == want
+    conf = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(conf)
+    try:
+        for n in ("1", "8"):
+            spark.conf.set(conf, n)
+            assert run(inputs) == want, f"{conf}={n}"
+    finally:
+        spark.conf.set(conf, old)
+
+
+def test_df_facade_single_planner_sized_shuffle(spark, sf_smoke):
+    """Exactly one shuffle between the map and the reduce UDFs, and it
+    is the grouping's own ENSURE_REQUIREMENTS exchange — the origin AQE
+    coalesces — not a fixed-count repartition AQE must leave alone."""
+    df = run_mapreduce_df(
+        spark, _inputs(spark, sf_smoke), apps.wc_map, apps.wc_reduce
+    )
+    tree = plans.final_plan(df)
+    plan = plans.formatted_plan(df)
+    reduce_at = re.search(r"FlatMapGroupsInPandas \(\d+\)", tree).start()
+    map_at = re.search(r"(?<!\w)MapInPandas \(\d+\)", tree).start()
+    assert reduce_at < map_at, tree
+    assert plans.count_nodes(tree[reduce_at:map_at], "Exchange") == 1, tree
+    assert "ENSURE_REQUIREMENTS" in plan, plan
+    assert "REPARTITION_BY_NUM" not in plan, plan
 
 
 def test_text_sink_roundtrip(spark, sf_smoke, tmp_path):

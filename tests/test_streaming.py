@@ -781,3 +781,41 @@ def test_stream_nb_model_swap_two_version_drain(spark, sf_correctness):
 
     mf = read_manifest(nb_swap_store_base(sf_correctness))
     assert mf["current"] == 2 and mf["versions"] == [1, 2]
+
+
+@pytest.mark.parametrize("bad", ["abc", "0", "-4", "2.5", " 3"])
+def test_drain_conf_invalid_env_override_falls_back(spark, monkeypatch, bad):
+    """A malformed partition override warns and is ignored: the drain
+    is sized from its input bytes as if the variable were unset."""
+    from tda596_lab02mapreduce_spark.streaming.windows import drain_conf
+
+    conf = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(conf)
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", raising=False)
+    with drain_conf(spark, 1024):
+        derived = spark.conf.get(conf)
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", bad)
+    with pytest.warns(RuntimeWarning, match="SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"):
+        with drain_conf(spark, 1024):
+            assert spark.conf.get(conf) == derived
+    assert spark.conf.get(conf) == before
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "3")
+    with drain_conf(spark, 1024):
+        assert spark.conf.get(conf) == "3"
+    assert spark.conf.get(conf) == before
+
+
+def test_source_bytes_missing_path_is_unknown(sf_smoke, tmp_path):
+    from tda596_lab02mapreduce_spark.streaming.windows import source_bytes
+
+    assert source_bytes(str(tmp_path / "no_such_sf")) is None
+    n = source_bytes(sf_smoke)
+    assert n and source_bytes(sf_smoke, copies=2) == 2 * n
+
+
+def test_source_bytes_non_local_uri_is_unknown(sf_smoke):
+    from tda596_lab02mapreduce_spark.streaming.windows import source_bytes
+
+    assert source_bytes("s3a://bucket/sf0.01") is None
+    assert source_bytes("hdfs://nn:8020/data/sf0.01", "documents") is None
+    assert source_bytes("file://" + sf_smoke) == source_bytes(sf_smoke)
