@@ -3,19 +3,14 @@
 ``reducef(key, values) -> value`` (mr/worker.go:36-37) — executed on
 Spark.
 
-Two implementations with identical semantics (property-tested equal):
+Implementation: mapInPandas (vectorized UDTF ≙ mapf) →
+groupBy(key).applyInPandas (full-list UDAF ≙ reducef), Arrow-batched.
+The grouping's own hash exchange is the shuffle, so AQE sizes the
+reduce side from the shuffle bytes instead of a fixed nReduce. Its
+results are tested equal to the native Catalyst word count
+(tests/test_mapreduce.py).
 
-- ``run_mapreduce``: RDD form — flatMap → groupByKey(n) → mapValues.
-  The closest structural analogue of the reference pipeline
-  (scan → flatMap → hash shuffle → group → reduce); Python rides the
-  whole path, so this is the semantic-fidelity mode, not the fast path.
-- ``run_mapreduce_df``: DataFrame form — mapInPandas (vectorized
-  UDTF ≙ mapf) → groupBy(key).applyInPandas (full-list UDAF ≙
-  reducef). Arrow-batched; preferred of the two. The grouping's own
-  hash exchange is the shuffle, so AQE sizes the reduce side from the
-  shuffle bytes instead of a fixed nReduce.
-
-Both deliberately preserve the reference's full-list reduce semantics:
+It deliberately preserves the reference's full-list reduce semantics:
 the UDAF sees EVERY value for its key materialized (no combiner, not
 merge-based — SURVEY.md §4.2). That is inherently shuffle-heavy; real
 queries should use algebraic Catalyst aggregates (the rest of the
@@ -40,32 +35,15 @@ ReduceF = Callable[[str, list[str]], str]
 KV_SCHEMA = "key string, value string"
 
 
-def run_mapreduce(
-    spark: SparkSession,
-    inputs: DataFrame,
-    mapf: MapF,
-    reducef: ReduceF,
-    n_reduce: int = 10,
-) -> DataFrame:
-    """RDD-form MapReduce. ``inputs`` must have (filename, contents)
-    string columns — one row per input file, mirroring the
-    one-map-task-per-whole-file granularity (mr/coordinator.go:196-205)."""
-    kv = inputs.rdd.flatMap(lambda row: mapf(row[0], row[1]))
-    reduced = (
-        kv.groupByKey(numPartitions=n_reduce)
-        .map(lambda g: (g[0], reducef(g[0], list(g[1]))))
-    )
-    return spark.createDataFrame(reduced, schema=KV_SCHEMA)
-
-
 def run_mapreduce_df(
     spark: SparkSession,
     inputs: DataFrame,
     mapf: MapF,
     reducef: ReduceF,
 ) -> DataFrame:
-    """DataFrame/Arrow-form MapReduce (same contract, vectorized
-    transport)."""
+    """MapReduce over ``inputs`` with (filename, contents) string
+    columns — one row per input file, mirroring the
+    one-map-task-per-whole-file granularity (mr/coordinator.go:196-205)."""
 
     def do_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -25,7 +25,8 @@ the two algorithms is property-tested on the near-dup graph and on a
 
 Scale notes (100 TB posture):
 - the edge list is cached pre-partitioned on the join key, so every
-  round reuses one shuffle layout instead of re-exchanging;
+  round reuses one shuffle layout instead of re-exchanging; it is
+  released on every exit, the no-fixpoint raise included;
 - labels are `localCheckpoint`ed each round — iterative loops
   otherwise stack a join+agg lineage per round and replan the whole
   history every action (the classic iterative-Spark trap);
@@ -98,24 +99,27 @@ def connected_components(
     # sibling star loop: 4.63→3.88 s / 3.42→2.99 s at sf0.1). Plan
     # truncation is identical — localCheckpoint wraps the frame in a
     # LogicalRDD either way; eager only forces a separate count() job.
-    labels = (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("comp"))
-        .localCheckpoint(eager=False)
-    )
-    prev_sum = labels.agg(F.sum("comp")).first()[0]
+    try:
+        labels = (
+            sym.select(F.col("src").alias("id"))
+            .distinct()
+            .select("id", F.col("id").alias("comp"))
+            .localCheckpoint(eager=False)
+        )
+        prev_sum = labels.agg(F.sum("comp")).first()[0]
 
-    for _ in range(max_iter):
-        labels = _propagate(sym, labels).localCheckpoint(eager=False)
-        cur_sum = labels.agg(F.sum("comp")).first()[0]
-        if cur_sum == prev_sum:  # labels monotone ⇒ sum fixed ⇒ fixpoint
-            break
-        prev_sum = cur_sum
-    else:
-        raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
-
-    sym.unpersist()
+        for _ in range(max_iter):
+            labels = _propagate(sym, labels).localCheckpoint(eager=False)
+            cur_sum = labels.agg(F.sum("comp")).first()[0]
+            if cur_sum == prev_sum:  # labels monotone ⇒ sum fixed ⇒ fixpoint
+                break
+            prev_sum = cur_sum
+        else:
+            raise RuntimeError(
+                f"connected_components: no fixpoint in {max_iter} rounds"
+            )
+    finally:
+        sym.unpersist()
     return labels.select(F.col("id").alias(id_out), F.col("comp").alias(comp_out))
 
 

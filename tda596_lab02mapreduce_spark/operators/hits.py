@@ -24,30 +24,24 @@ bit-identical at any parallelism and in any engine — the registered
 query carries a full unrolled-CTE DuckDB hash oracle.
 
 Scale notes (100 TB posture, mirrors pagerank.py):
-- the edge list is cached pre-partitioned once per join side; every
-  round reuses the two shuffle layouts;
+- the deduped edge list is checkpointed once (``localCheckpoint``)
+  and both join directions read it: the rounds read its blocks and
+  there is no cache entry to release;
 - the per-round max is a 1-row aggregate crossJoin-broadcast — it
   stays INSIDE the plan (no driver-side collect in the loop);
-- fixed iteration count, scores localCheckpoint'ed per round — no
-  lineage stacking, zero driver decisions in the loop;
+- fixed iteration count on ``operators/rounds.fixed_rounds``, hub
+  scores lazily checkpointed per round — no lineage stacking, zero
+  driver decisions in the loop;
 - integer sums are order-independent, so AQE/skew-split re-plans
   cannot change the result.
-
-Retention note (ADVICE r16): the lazily-checkpointed frames created
-here (the deduped edge list, the per-half-round raw sums) are NOT
-unpersisted before return — the consuming action runs after this
-function returns (the query-builder contract), so no caller boundary
-exists inside it. The blocks are score/edge-sized, bounded per query,
-and evicted LRU by the block manager; a long-lived session that wants
-them gone eagerly can unpersist the returned frame's lineage or cycle
-the session. The explicit persist() layers (e_src/e_dst) ARE released
-before return.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from tda596_lab02mapreduce_spark.operators.rounds import fixed_rounds
 
 __all__ = ["hits"]
 
@@ -60,7 +54,6 @@ def hits(
     dst: str = "dst",
     *,
     iters: int = 5,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Run ``iters`` HITS rounds on the directed edge list.
 
@@ -80,28 +73,23 @@ def hits(
     # sf0.1 after this + the raw-frame checkpoint below).
     norm = f"CAST((CAST({_UNIT} AS DECIMAL(38,0)) * s) div m AS BIGINT)"
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    # Materialize the deduped edge list ONCE before deriving the two
-    # layouts: each persist() below triggers its own materialization
-    # job, and without the checkpoint both jobs re-ran the full
-    # upstream join + distinct (optimization r16, guide §1.2 — jobs do
-    # not share un-materialized subplans).
+    # Materialize the deduped edge list ONCE: both join directions of
+    # every round read it, and without the checkpoint each re-ran the
+    # full upstream join + distinct (optimization r16, guide §1.2 —
+    # jobs do not share un-materialized subplans). No
+    # repartition(key) first: the checkpoint does not keep it (see
+    # queries/association._copurchase_edges).
     e = e.localCheckpoint(eager=False)
-    # Two cached layouts, one per join direction: irrelevant while the
-    # score side broadcasts (fixture scale), load-bearing at the scale
-    # where it doesn't — the SMJ then reuses the edge layout instead
-    # of re-exchanging the full edge list every half-round.
-    e_src = e.repartition("src").persist()
-    e_dst = e.repartition("dst").persist()
-    hub = e_src.select("src").distinct().select(
+    hub = e.select("src").distinct().select(
         "src", F.lit(_UNIT).cast("bigint").alias("hu")
     ).localCheckpoint()
-    auth = None
-    for it in range(iters):
+
+    def round_(hub: DataFrame) -> tuple[DataFrame, DataFrame]:
         # the raw sums are referenced TWICE (max branch + normalize
         # branch): without the checkpoint the join+agg would run twice
         # per half-round (measured — the other half of the r9 tuning)
         a_raw = (
-            e_src.join(hub, "src")
+            e.join(hub, "src")
             .groupBy("dst")
             .agg(F.sum("hu").alias("s"))
             .localCheckpoint(eager=False)
@@ -111,7 +99,7 @@ def hits(
             "dst", F.expr(norm).alias("au")
         )
         h_raw = (
-            e_dst.join(auth.withColumnRenamed("au", "hu"), "dst")
+            e.join(auth.withColumnRenamed("au", "hu"), "dst")
             .groupBy("src")
             .agg(F.sum("hu").alias("s"))
             .localCheckpoint(eager=False)
@@ -120,22 +108,15 @@ def hits(
         hub = h_raw.crossJoin(F.broadcast(h_max)).select(
             "src", F.expr(norm).alias("hu")
         )
-        # eager hub checkpoint every 2 rounds (round-10 sweep, the
-        # pagerank-cadence method applied per VERDICT r9 #2, measured
-        # at sf0.1: per-half-round-only lazy checkpoints 8.8-10.6 s,
-        # score cadence 1 → 6.3-6.7 s, cadence 2 → 6.3-6.6 s, cadence
-        # 3 → 6.0-7.0 s, no cadence with unhinted max 7.5-19.8 s
-        # (unstable: the chained 2-joins-per-half-round plan stacks).
-        # Cadence 2 picked as the stable optimum; like pagerank, the
-        # bounded lineage also caps lost-partition recompute at
-        # cluster scale. Placement is semantics-free (pure integer
-        # plan — sweep hashes all agreed).
-        if checkpoint_every and it != iters - 1 and (
-            it % checkpoint_every == checkpoint_every - 1
-        ):
-            hub = hub.localCheckpoint()
-    e_src.unpersist()
-    e_dst.unpersist()
+        return auth, hub
+
+    # all but the last round through the driver, cut every round; the
+    # last runs inline because its authority frame is returned too.
+    # Fresh-JVM A/B at sf0.1 of this loop over the checkpointed edges
+    # against persisted per-side layouts with an eager hub checkpoint
+    # every 2nd round: 6.98/5.01/4.90 s vs 8.47/8.55/8.96 s
+    hub = fixed_rounds(hub, lambda h: round_(h)[1], iters - 1)
+    auth, hub = round_(hub)
     return hub.select(
         F.lit("hub").alias("node_type"),
         F.col("src").alias("node_id"),

@@ -32,19 +32,22 @@ Quantization error vs. the real-valued fixpoint is < 1e-5 per rank —
 far inside every consumer's tolerance.
 
 Scale notes (100 TB posture, mirrors components.py):
-- the symmetric edge list is cached pre-partitioned on the join key,
-  so every round reuses one shuffle layout;
+- the symmetric edge list, and the same list with the receiver's
+  degree, are checkpointed once (``localCheckpoint``): the rounds read
+  their blocks and there is no cache entry to release;
 - degrees are computed once and carried WITH the rank rows (joined a
   single time up front), so each round is join+agg, not join+join;
-- ranks are ``localCheckpoint``ed per round — no lineage stacking;
-- a fixed iteration count means zero driver-side convergence actions
-  in the loop.
+- the rounds run on ``operators/rounds.fixed_rounds`` with a lazy
+  checkpoint every 3 rounds — bounded lineage, and a fixed iteration
+  count means zero driver-side convergence actions in the loop.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from tda596_lab02mapreduce_spark.operators.rounds import fixed_rounds
 
 __all__ = ["pagerank"]
 
@@ -58,7 +61,6 @@ def pagerank(
     damping: float = 0.85,
     id_out: str = "id",
     rank_out: str = "rank",
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Rank nodes of an undirected edge list by power iteration.
 
@@ -73,7 +75,7 @@ def pagerank(
     sym = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    sym = sym.repartition("src").persist()
+    sym = sym.localCheckpoint(eager=False)
 
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # the RECEIVER's degree rides on the edge list (joined once, before
@@ -86,8 +88,7 @@ def pagerank(
             "dst",
         )
         .select("src", "dst", "dst_deg")
-        .repartition("src")
-        .persist()
+        .localCheckpoint(eager=False)
     )
     # damping must be expressible in hundredths so the update is pure
     # integer arithmetic (d_pct/100); 0.85 -> 85
@@ -102,8 +103,8 @@ def pagerank(
         F.col("src").alias("id"), "deg", F.lit(1_000_000).cast("bigint").alias("rank_u")
     ).localCheckpoint()
 
-    for it in range(iters):
-        state = (
+    def step(state: DataFrame) -> DataFrame:
+        return (
             sym_d.join(
                 state.select(
                     F.col("id").alias("src"),
@@ -129,28 +130,14 @@ def pagerank(
                 ).alias("rank_u"),
             )
         )
-        # checkpoint cadence (round-9 sweep, VERDICT r8 #4, measured at
-        # sf0.1 on pre-checkpointed edges): every round 8.1 s, cadence
-        # 2 → 4.1-5.1 s, cadence 3 → 3.6-4.6 s, cadence 5 → 4.2 s, and
-        # the fully-chained single job (checkpoint_every=0) LOST at
-        # 6.9 s — a 10-layer join+agg plan pays more in optimizer/
-        # codegen than it saves in job scheduling (negative result,
-        # recorded in BASELINE.md).  Default 3: near the fixture
-        # optimum, and lineage depth ≤ 3 joins also bounds the
-        # recompute cost of a lost partition at cluster scale.
-        # Results are independent of checkpoint placement (pure
-        # integer plan).
-        if checkpoint_every and (
-            it % checkpoint_every == checkpoint_every - 1 or it == iters - 1
-        ):
-            state = state.localCheckpoint()
-    if not checkpoint_every:
-        # one eager materialization of the whole chained plan — the
-        # single job that replaces 10 per-round jobs — so the caches
-        # can be released before returning
-        state = state.localCheckpoint()
-    sym.unpersist()
-    sym_d.unpersist()
+
+    # cadence 3 (round-9 sweep at sf0.1, eager cuts): every round
+    # 8.1 s, every 2nd 4.1-5.1 s, every 3rd 3.6-4.6 s, every 5th 4.2 s,
+    # fully chained 6.9 s. Lazy cuts at cadence 3 over the checkpointed
+    # edges against eager cuts over persisted ones, fresh-JVM A/B at
+    # sf0.1: median 6.80 s vs 7.12 s (7 runs a side). Results do not
+    # depend on placement (pure integer plan).
+    state = fixed_rounds(state, step, iters, every=3)
     return state.select(
         F.col("id").alias(id_out),
         (F.col("rank_u").cast("double") / F.lit(1_000_000.0)).alias(rank_out),

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from tda596_lab02mapreduce_spark import io
 from tda596_lab02mapreduce_spark.functions.text import ngram_shingles, tokens_nonempty
+from tda596_lab02mapreduce_spark.operators.rounds import fixed_rounds
 from tda596_lab02mapreduce_spark.registry import register
 
 _MIN_SUPPORT = 5
@@ -530,8 +531,8 @@ def _hits_oracle() -> str:
         "iteration is bit-identical in both engines and the oracle is "
         "the full unrolled-CTE replay (the pagerank_neardup_hubs "
         "discipline, operators/hits.py). Plan per round: two keyed "
-        "join+agg shuffles on cached pre-partitioned edges plus 1-row "
-        "max broadcasts that stay inside the plan; fixed rounds, "
+        "join+agg shuffles on checkpointed edges plus "
+        "1-row max broadcasts that stay inside the plan; fixed rounds, "
         "localCheckpoint per half-round, zero driver actions in the "
         "loop."
     ),
@@ -611,27 +612,23 @@ def kcore_peel_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    for _ in range(rounds):
+
+    def peel(e: DataFrame) -> DataFrame:
         ds = e.groupBy("src").agg(F.count(F.lit(1)).alias("c_s")).filter(
             F.col("c_s") >= k
         )
         dd = e.groupBy("dst").agg(F.count(F.lit(1)).alias("c_d")).filter(
             F.col("c_d") >= k
         )
-        # LAZY per-round checkpoints (optimization r17, guide §1.2
-        # fewer jobs): the loop has no in-loop actions, so eager
-        # checkpoints were 5 standalone materialization jobs; lazily
-        # marked, each round materializes once inside the final action
-        # with identical plan truncation. Fresh-JVM A/B at sf0.1
-        # (bench's isolated protocol, 3 cold runs each): eager
-        # 3.89/3.48/3.50 s vs lazy 3.42/3.09/3.40 s — lazy 3/3.
-        # invariant: the first action on a lazy checkpoint must compute all partitions
-        e = (
+        return (
             e.join(ds.select("src"), "src")
             .join(dd.select("dst"), "dst")
             .select("src", "dst")
-            .localCheckpoint(eager=False)
         )
+
+    # lazy per-round cuts (optimization r17): fresh-JVM A/B at sf0.1,
+    # eager 3.89/3.48/3.50 s vs lazy 3.42/3.09/3.40 s
+    e = fixed_rounds(e, peel, rounds)
     return (
         e.groupBy("src")
         .agg(F.count(F.lit(1)).alias("deg"))
@@ -975,7 +972,16 @@ def _copurchase_edges(
     memory contract AND the win, and the bare-1g local[32] end-to-end
     run was RE-VERIFIED at 8× this round (pair count + weighted edge
     staging complete, no OOM). Returned edges are repartition(src)-ed
-    and persist()-ed — callers unpersist()."""
+    and persist()-ed — callers unpersist() once their rounds are built:
+    checkpointing a round (lazily too, under AQE) runs every stage that
+    reads the edges, and only the round's final stage is deferred. They
+    stay persisted, not checkpointed: under AQE a checkpointed frame's
+    scan keeps neither the hash partitioning nor the materialized size,
+    so a round joining it is planned sort-merge and both sides shuffle
+    before AQE switches to a broadcast, where the persisted layout is
+    broadcast up front (one BFS round and its collect at sf0.1: 8 jobs
+    persisted, 14 checkpointed; the fresh-JVM A/B lost for LPA, BFS,
+    SSSP and ppr with checkpointed edges)."""
     orders = io.load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = io.load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     cb = orders.join(li, orders.o_orderkey == li.l_orderkey).select(
@@ -1056,8 +1062,8 @@ def _copurchase_edges(
         "unrolled MATERIALIZED-CTE oracle replays it bit-for-bit. "
         "Plan per round: one state-edge join + one dst-keyed "
         "aggregate; dst deg AND seed base ride the edge list (joined "
-        "once up front), state localCheckpoints at cadence 3 (the "
-        "pagerank sweep), seeds via TakeOrderedAndProject (never a "
+        "once up front), state lazily localCheckpointed at cadence 3 "
+        "(the pagerank sweep), seeds via TakeOrderedAndProject (never a "
         "partition-less window)."
     ),
     tags=("graph", "analytics", "agg", "join"),
@@ -1104,8 +1110,9 @@ def ppr_seeded_related_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = n0.select(
         "id", "deg", "base_u", F.lit(1_000_000).cast("bigint").alias("rank_u")
     ).localCheckpoint()
-    for it in range(rounds):
-        state = (
+
+    def step(state: DataFrame) -> DataFrame:
+        return (
             sym_d.join(
                 state.select(
                     F.col("id").alias("src"),
@@ -1131,8 +1138,8 @@ def ppr_seeded_related_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("rank_u"),
             )
         )
-        if it % 3 == 2 or it == rounds - 1:
-            state = state.localCheckpoint()
+
+    state = fixed_rounds(state, step, rounds, every=3)
     e.unpersist()
     sym_d.unpersist()
     return state.select(
@@ -1236,7 +1243,8 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id", F.col("s_dist").alias("dist"))
         .localCheckpoint()
     )
-    for _ in range(rounds):
+
+    def expand(state: DataFrame) -> DataFrame:
         m = (
             e.join(
                 state.filter(F.col("dist").isNotNull()).select(
@@ -1247,11 +1255,11 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("dst").alias("id"))
             .agg((F.min("dist") + 1).alias("mind"))
         )
-        state = (
-            state.join(m, "id", "left")
-            .select("id", F.coalesce(F.col("dist"), F.col("mind")).alias("dist"))
-            .localCheckpoint()
+        return state.join(m, "id", "left").select(
+            "id", F.coalesce(F.col("dist"), F.col("mind")).alias("dist")
         )
+
+    state = fixed_rounds(state, expand, rounds)
     e.unpersist()
     return state.filter(F.col("dist").isNotNull()).select(
         F.col("id").alias("part_id"), F.col("dist").cast("bigint").alias("hops")
@@ -1359,7 +1367,8 @@ def graph_weighted_cheapest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    for _ in range(rounds):
+
+    def relax(state: DataFrame) -> DataFrame:
         m = (
             e.join(
                 state.filter(F.col("dist") < _SSSP_INF).select(
@@ -1370,16 +1379,14 @@ def graph_weighted_cheapest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min(F.col("dist") + F.col("w")).alias("mind"))
         )
-        state = (
-            state.join(m, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("dist"), F.coalesce(F.col("mind"), F.lit(_SSSP_INF))
-                ).alias("dist"),
-            )
-            .localCheckpoint()
+        return state.join(m, "id", "left").select(
+            "id",
+            F.least(
+                F.col("dist"), F.coalesce(F.col("mind"), F.lit(_SSSP_INF))
+            ).alias("dist"),
         )
+
+    state = fixed_rounds(state, relax, rounds)
     e.unpersist()
     return state.filter(F.col("dist") < _SSSP_INF).select(
         F.col("id").alias("part_id"), F.col("dist").cast("bigint").alias("cost_u")

@@ -1160,9 +1160,9 @@ deg AS (SELECT src AS id, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY src),
         "components are all degree-regular — every rank exactly 1.0, "
         "a vacuous oracle; this graph has 17+ distinct degrees at "
         "sf0.01.) Fixed 10 power-iteration rounds (operators/"
-        "pagerank.py): edge list cached pre-partitioned, degree "
+        "pagerank.py): edge list checkpointed pre-partitioned, degree "
         "carried with the rank state so each round is one join+agg, "
-        "lineage localCheckpoint'ed per round, zero driver actions in "
+        "lineage lazily checkpointed every 3 rounds, zero driver actions in "
         "the loop. Hash-checked since round 8: the iteration runs in "
         "exact integer micro-units (no floating point in the loop — "
         "see operators/pagerank.py for why the rounded-doubles "

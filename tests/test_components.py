@@ -45,6 +45,16 @@ def test_max_iter_guard_raises(spark):
         _cc(spark, [(i, i + 1) for i in range(9)], max_iter=2)
 
 
+def test_max_iter_guard_leaves_no_cached_edges(spark):
+    """A loop that gives up must not leave its edge layout behind in the
+    session-global cache, where it would outlive the failed query."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        _cc(spark, [(i, i + 1) for i in range(20)], max_iter=2)
+    assert cache.isEmpty()
+
+
 def test_pagerank_star_graph_analytic_fixpoint(spark):
     """Star K_{1,4}: the fixpoint is exactly solvable — center
     r_c = 0.66/0.2775 ≈ 2.3784, leaves ≈ 0.6554. The alternating

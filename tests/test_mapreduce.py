@@ -1,7 +1,7 @@
-"""MR façade parity tests (SURVEY.md §7 phase 2): RDD form ≡
-DataFrame form ≡ native Catalyst query, plus the text-sink
-round-trip — the moral equivalent of the reference's differential
-test against mrsequential (main/test-mr.sh:81-111)."""
+"""MR façade parity tests (SURVEY.md §7 phase 2): façade ≡ native
+Catalyst query, plus the text-sink round-trip — the moral equivalent
+of the reference's differential test against mrsequential
+(main/test-mr.sh:81-111)."""
 
 from __future__ import annotations
 
@@ -11,11 +11,7 @@ from pyspark.sql import functions as F
 
 from tda596_lab02mapreduce_spark import apps, io, plans
 from tda596_lab02mapreduce_spark.functions.text import tokens_nonempty
-from tda596_lab02mapreduce_spark.mapreduce import (
-    run_mapreduce,
-    run_mapreduce_df,
-    save_text_kv,
-)
+from tda596_lab02mapreduce_spark.mapreduce import run_mapreduce_df, save_text_kv
 
 
 def _inputs(spark, sf_dir):
@@ -35,28 +31,15 @@ def _native_wc(spark, sf_dir):
     )
 
 
-def test_wc_rdd_facade_matches_native(spark, sf_smoke):
+def test_wc_facade_matches_native(spark, sf_smoke):
     got = {
         (r.key, int(r.value))
-        for r in run_mapreduce(
+        for r in run_mapreduce_df(
             spark, _inputs(spark, sf_smoke), apps.wc_map, apps.wc_reduce
         ).collect()
     }
     want = {(r.word, r["count"]) for r in _native_wc(spark, sf_smoke).collect()}
     assert got == want
-
-
-def test_wc_df_facade_matches_rdd_facade(spark, sf_smoke):
-    inputs = _inputs(spark, sf_smoke)
-    a = {
-        (r.key, r.value)
-        for r in run_mapreduce(spark, inputs, apps.wc_map, apps.wc_reduce).collect()
-    }
-    b = {
-        (r.key, r.value)
-        for r in run_mapreduce_df(spark, inputs, apps.wc_map, apps.wc_reduce).collect()
-    }
-    assert a == b
 
 
 def test_indexer_facade(spark, sf_smoke):
@@ -72,27 +55,8 @@ def test_indexer_facade(spark, sf_smoke):
     assert docs == sorted(docs), "posting list must be sorted"
 
 
-def test_partition_invariance(spark, sf_smoke):
-    """The reference's parallelism tests reduce to: results must not
-    depend on partition layout (SURVEY.md §5)."""
-    inputs = _inputs(spark, sf_smoke)
-    one = {
-        (r.key, r.value)
-        for r in run_mapreduce(
-            spark, inputs.repartition(1), apps.wc_map, apps.wc_reduce, n_reduce=1
-        ).collect()
-    }
-    many = {
-        (r.key, r.value)
-        for r in run_mapreduce(
-            spark, inputs.repartition(16), apps.wc_map, apps.wc_reduce, n_reduce=10
-        ).collect()
-    }
-    assert one == many
-
-
 def test_df_partition_invariance(spark, sf_smoke):
-    """The DataFrame form has no reducer count of its own: its results
+    """The façade has no reducer count of its own: its results
     must not depend on the input layout nor on the shuffle partition
     count the planner sizes the reduce side from."""
     inputs = _inputs(spark, sf_smoke)
@@ -134,7 +98,7 @@ def test_df_facade_single_planner_sized_shuffle(spark, sf_smoke):
 
 
 def test_text_sink_roundtrip(spark, sf_smoke, tmp_path):
-    out = run_mapreduce(
+    out = run_mapreduce_df(
         spark, _inputs(spark, sf_smoke), apps.wc_map, apps.wc_reduce
     )
     path = str(tmp_path / "mr-out")

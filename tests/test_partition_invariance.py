@@ -167,18 +167,29 @@ SLICE = [
     "timeseries_interpolate_linear",
     "privacy_l_diversity",
     "stats_covariance_matrix",
+    # the fixed-round graph loops
+    # (pagerank_neardup_hubs is above; kcore is in SLICE_CORRECTNESS)
+    "community_label_propagation",
+    "hits_copurchase_bipartite",
+    "ppr_seeded_related_parts",
+    "graph_bfs_hops",
+    "graph_weighted_cheapest",
 ]
 
 
-@pytest.mark.parametrize("name", SLICE)
-def test_result_invariant_under_shuffle_partition_count(spark, sf_smoke, name):
+# Empty at the smoke scale, so checked on the correctness fixture:
+# k=25 peels every node of the sf0.001 purchase graph.
+SLICE_CORRECTNESS = ["kcore_peel_bipartite"]
+
+
+def _assert_invariant(spark, sf_dir, name):
     fn = registry.get(name).spark_fn
     orig = spark.conf.get("spark.sql.shuffle.partitions")
     hashes = {}
     try:
         for n in (1, 32):
             spark.conf.set("spark.sql.shuffle.partitions", str(n))
-            df = fn(spark, sf_smoke)
+            df = fn(spark, sf_dir)
             rows = [tuple(r) for r in df.collect()]
             assert rows, f"{name} returned no rows at partitions={n}"
             hashes[n] = value_hash(rows, df.columns)
@@ -187,3 +198,13 @@ def test_result_invariant_under_shuffle_partition_count(spark, sf_smoke, name):
     assert hashes[1] == hashes[32], (
         f"{name}: result depends on shuffle partition count"
     )
+
+
+@pytest.mark.parametrize("name", SLICE)
+def test_result_invariant_under_shuffle_partition_count(spark, sf_smoke, name):
+    _assert_invariant(spark, sf_smoke, name)
+
+
+@pytest.mark.parametrize("name", SLICE_CORRECTNESS)
+def test_result_invariant_at_correctness_scale(spark, sf_correctness, name):
+    _assert_invariant(spark, sf_correctness, name)
