@@ -45,26 +45,31 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # session (e.g. the correctness harness's default one) works.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        # Normalize ts to a session-TZ TIMESTAMP whichever way the
-        # fixture generation annotated it:
-        #  - TIMESTAMP(NANOS): surfaces as int64 via nanosAsLong;
-        #    floor-divide to µs — identical to DuckDB's ns truncation.
-        #  - TIMESTAMP(MICROS, isAdjustedToUTC=false): surfaces as
-        #    TIMESTAMP_NTZ, which Spark 4 rejects in tz-aware functions
-        #    (unix_micros et al. — the CORRECTNESS_r04/BENCH_r04 crash).
-        #    to_utc_timestamp(ts, 'UTC') pins "naive wall time == UTC
-        #    instant" regardless of the session timezone — the same
-        #    reading DuckDB's epoch_us gives the naive column, so epoch
-        #    outputs agree even on a non-UTC driver session.
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
+    return normalize_events_ts(df) if name == "events" else df
 
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(ts_type, T.TimestampNTZType):
-            df = df.withColumn("ts", F.to_utc_timestamp("ts", "UTC"))
+
+def normalize_events_ts(df: DataFrame) -> DataFrame:
+    """Normalize events.ts to a session-TZ TIMESTAMP whichever way the
+    fixture generation annotated it — shared by the batch load and the
+    events file stream, so both read the same column:
+
+    - TIMESTAMP(NANOS): surfaces as int64 via nanosAsLong;
+      floor-divide to µs — identical to DuckDB's ns truncation.
+    - TIMESTAMP(MICROS, isAdjustedToUTC=false): surfaces as
+      TIMESTAMP_NTZ, which Spark 4 rejects in tz-aware functions
+      (unix_micros et al. — the CORRECTNESS_r04/BENCH_r04 crash).
+      to_utc_timestamp(ts, 'UTC') pins "naive wall time == UTC
+      instant" regardless of the session timezone — the same
+      reading DuckDB's epoch_us gives the naive column, so epoch
+      outputs agree even on a non-UTC driver session."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    ts_type = df.schema["ts"].dataType
+    if isinstance(ts_type, T.LongType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(ts_type, T.TimestampNTZType):
+        return df.withColumn("ts", F.to_utc_timestamp("ts", "UTC"))
     return df
 
 

@@ -33,31 +33,12 @@ has no clustering; this extends SURVEY.md §2C's similarity band.
 
 from __future__ import annotations
 
-import hashlib
-import json
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tda596_lab02mapreduce_spark import sidecars
+
 _Q_SCALE = 1 << 20
-
-_KMEANS_MODEL_CACHE: dict[tuple, dict] = {}
-
-
-def _model_cache_dir() -> str:
-    default = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".models",
-    )
-    return os.environ.get("SPARK_GRAFT_MODEL_DIR", default)
-
-
-def _sidecar_path(key: tuple) -> str:
-    return os.path.join(
-        _model_cache_dir(),
-        "kmeans_" + hashlib.sha256(repr(key).encode()).hexdigest()[:16] + ".json",
-    )
 
 
 def _trunc_div(s: int, n: int) -> int:
@@ -110,16 +91,8 @@ def kmeans_fit(
     convention that avoids collapse)."""
     key = (dataset_key, vec_col, dim, k, rounds)
     if dataset_key is not None and not refit:
-        if key in _KMEANS_MODEL_CACHE:
-            return _KMEANS_MODEL_CACHE[key]
-        path = _sidecar_path(key)
-        if os.path.exists(path):
-            with open(path) as f:
-                model = json.load(f)
-            model["centroids_q"] = [
-                [int(x) for x in row] for row in model["centroids_q"]
-            ]
-            _KMEANS_MODEL_CACHE[key] = model
+        model = sidecars.load("kmeans", key)
+        if model is not None:
             return model
 
     q = corpus.select(F.col(id_col).alias("__id"), _xq(vec_col).alias("xq"))
@@ -158,13 +131,7 @@ def kmeans_fit(
         cents = new_cents
     model = {"centroids_q": cents, "k": k, "rounds": rounds, "dim": dim}
     if dataset_key is not None:
-        _KMEANS_MODEL_CACHE[key] = model
-        os.makedirs(_model_cache_dir(), exist_ok=True)
-        path = _sidecar_path(key)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(model, f)
-        os.replace(tmp, path)
+        sidecars.save("kmeans", key, model)
     return model
 
 
@@ -207,17 +174,9 @@ def kmeans_oracle_sql(
     """DuckDB replay of the assignment against the committed sidecar:
     identical integer centroids as a literal table, identical BIGINT
     distance, identical (dist, cluster) argmin."""
-    key = (sf_dir, vec_col, dim, k, rounds)
-    path = _sidecar_path(key)
-    if not os.path.exists(path):
-        raise FileNotFoundError(
-            f"canonical kmeans sidecar missing: {path} — run the "
-            f"embedding_kmeans_assign query once at {sf_dir} to fit "
-            "and persist it (the committed .models/ files are the "
-            "canonical serving models)"
-        )
-    with open(path) as f:
-        model = json.load(f)
+    model = sidecars.committed(
+        "kmeans", (sf_dir, vec_col, dim, k, rounds), "embedding_kmeans_assign"
+    )
     crows = ",\n".join(
         f"({c + 1}, {i}, {int(model['centroids_q'][c][i])})"
         for c in range(len(model["centroids_q"]))

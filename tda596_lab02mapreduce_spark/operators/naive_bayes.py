@@ -52,52 +52,21 @@ model training; this extends SURVEY.md §2C's trained-model band.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_NB_MODEL_CACHE: dict[tuple, dict] = {}
+from tda596_lab02mapreduce_spark import sidecars
 
 # Distributed vocabulary cap (strictly below the 31-token fixture
 # vocabulary at every SF, so the OOV serve path is always exercised).
 NB_TOP_V = 24
 
 # Observability for tests: the row counts the driver actually received
-# on the last REAL fit (not a cache hit) — pins the V + V×C contract.
+# on the last REAL fit (not a sidecar load) — pins the V + V×C contract.
 _LAST_FIT_STATS: dict[str, int] = {}
-
-
-def _norm_key(dataset_key: str | None) -> str | None:
-    """Path-normalize the cache key so the fit and the oracle agree on
-    the sidecar regardless of trailing slashes / symlinks (a trailing
-    '/' in SPARK_GRAFT_SF_DIR would otherwise miss the cache).
-    Unconditional realpath: the key must be a pure function of the
-    path string + symlink resolution, never of whether the directory
-    happens to exist at call time (a staged dir created/deleted
-    between fit and oracle would otherwise hash to two different
-    sidecar paths — ADVICE r13)."""
-    if dataset_key is None:
-        return None
-    return os.path.realpath(dataset_key)
-
-
-def _model_cache_dir() -> str:
-    default = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".models",
-    )
-    return os.environ.get("SPARK_GRAFT_MODEL_DIR", default)
-
-
-def _sidecar_path(key: tuple) -> str:
-    return os.path.join(
-        _model_cache_dir(),
-        "nb_" + hashlib.sha256(repr(key).encode()).hexdigest()[:16] + ".json",
-    )
 
 
 def _w_u(num: int, den: int) -> int:
@@ -120,15 +89,10 @@ def naive_bayes_fit(
     {c: int}, "weights_u": {token: {c: int}}, "vocab": [...],
     "top_v": V}`` — all weights integer micro-units of the
     Laplace-smoothed log-probabilities over the capped vocabulary."""
-    key = (_norm_key(dataset_key), text_col, label_col, top_v)
+    key = (dataset_key, text_col, label_col, top_v)
     if dataset_key is not None and not refit:
-        if key in _NB_MODEL_CACHE:
-            return _NB_MODEL_CACHE[key]
-        path = _sidecar_path(key)
-        if os.path.exists(path):
-            with open(path) as f:
-                model = json.load(f)
-            _NB_MODEL_CACHE[key] = model
+        model = sidecars.load("nb", key)
+        if model is not None:
             return model
 
     spark = docs.sparkSession
@@ -199,13 +163,7 @@ def naive_bayes_fit(
         "top_v": top_v,
     }
     if dataset_key is not None:
-        _NB_MODEL_CACHE[key] = model
-        os.makedirs(_model_cache_dir(), exist_ok=True)
-        path = _sidecar_path(key)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(model, f)
-        os.replace(tmp, path)
+        sidecars.save("nb", key, model)
     return model
 
 
@@ -257,60 +215,21 @@ def naive_bayes_oracle_sql(
     (score DESC, class ASC) argmax.  The vocabulary cap replays for
     free — out-of-vocabulary tokens drop at the inner join exactly as
     in the Spark serve."""
-    key = (_norm_key(sf_dir), text_col, label_col, top_v)
-    path = _sidecar_path(key)
-    if not os.path.exists(path):
-        raise FileNotFoundError(
-            f"canonical naive-bayes sidecar missing: {path} — run the "
-            f"naive_bayes_lang_confusion query once at {sf_dir} to fit "
-            "and persist it (the committed .models/ files are the "
-            "canonical serving models)"
-        )
-    with open(path) as f:
-        model = json.load(f)
-
-    def q(s: str) -> str:
-        # SQL string-literal escape: a token/class containing an
-        # apostrophe ("don't") must not break the generated VALUES
-        return "'" + str(s).replace("'", "''") + "'"
-
-    wrows = ",\n".join(
-        f"({q(t)}, {q(c)}, {int(model['weights_u'][t][c])})"
-        for t in model["vocab"]
-        for c in model["classes"]
+    model = sidecars.committed(
+        "nb", (sf_dir, text_col, label_col, top_v), "naive_bayes_lang_confusion"
     )
-    prows = ",\n".join(
-        f"({q(c)}, {int(model['priors_u'][c])})" for c in model["classes"]
-    )
+    ctes, pred = _nb_scoring_ctes(model, "")
     return f"""
-WITH w(t, c, w_u) AS (VALUES
-{wrows}
-),
-pri(c, prior_u) AS (VALUES
-{prows}
-),
-tok AS (
+WITH tok AS (
+  -- empty tokens (double spaces) need no filter: they are never in
+  -- the vocabulary, so the scoring inner join drops them
   SELECT {id_col} AS doc_id, {label_col} AS true_lang,
          unnest(string_split({text_col}, ' ')) AS t
   FROM documents
 ),
-scores AS (
-  SELECT tok.doc_id, tok.true_lang, w.c,
-         CAST(SUM(w.w_u) AS BIGINT) + MIN(pri.prior_u) AS score_u
-  FROM tok
-  JOIN w   ON w.t = tok.t
-  JOIN pri ON pri.c = w.c
-  WHERE length(tok.t) > 0
-  GROUP BY 1, 2, 3
-),
-pred AS (
-  SELECT doc_id, true_lang, c AS pred_lang,
-         row_number() OVER (PARTITION BY doc_id
-                            ORDER BY score_u DESC, c) AS rn
-  FROM scores
-)
+{ctes}
 SELECT true_lang, pred_lang, CAST(count(*) AS BIGINT) AS n_docs
-FROM pred WHERE rn = 1
+FROM {pred} WHERE rn = 1
 GROUP BY 1, 2
 """
 
@@ -384,13 +303,13 @@ NB_SWAP_KEY_SUFFIX = "#even-docs"  # v2 = deterministic refit on even doc_ids
 def nb_swap_v2_dataset_key(sf_dir: str) -> str:
     """The v2 sidecar's dataset key: the suffix is appended AFTER
     path normalization (realpath of the suffixed pseudo-path would
-    defeat _norm_key's spelling-invariance — a trailing slash or
+    defeat the store's spelling-invariance — a trailing slash or
     symlink spelling of the same dir would hash to a different v2
-    sidecar while v1 stayed stable; r15 review).  _norm_key is
-    idempotent on the result (parents are already resolved and the
-    suffixed leaf never exists), so the fit's own normalization
-    maps it to itself."""
-    return _norm_key(sf_dir) + NB_SWAP_KEY_SUFFIX
+    sidecar while v1 stayed stable; r15 review).  sidecars.path's
+    realpath is idempotent on the result (parents are already
+    resolved and the suffixed leaf never exists), so the store maps
+    it to itself."""
+    return os.path.realpath(sf_dir) + NB_SWAP_KEY_SUFFIX
 
 
 def naive_bayes_model_rows(spark: SparkSession, model: dict) -> DataFrame:
@@ -428,11 +347,13 @@ def naive_bayes_model_from_rows(rows) -> dict:
 
 def _nb_scoring_ctes(model: dict, tag: str) -> tuple[str, str]:
     """(CTE definitions, final-select fragment) scoring ``tok`` with
-    ``model``'s literal weights under suffix ``tag`` — the
-    naive_bayes_oracle_sql scoring shape, parameterized so two model
-    versions can share one statement."""
+    ``model``'s literal weights under suffix ``tag`` — the one NB
+    scoring SQL, parameterized so two model versions can share one
+    statement."""
 
     def q(s: str) -> str:
+        # SQL string-literal escape: a token/class containing an
+        # apostrophe ("don't") must not break the generated VALUES
         return "'" + str(s).replace("'", "''") + "'"
 
     wrows = ",\n".join(
@@ -473,18 +394,12 @@ def naive_bayes_swap_oracle_sql(sf_dir: str) -> str:
     the v2 (even-doc_ids refit) sidecar — the batch-id-keyed split
     that proves the mid-drain version bump switched scoring exactly
     at the micro-batch boundary."""
-    models = []
-    for ver, dkey in ((1, sf_dir), (2, nb_swap_v2_dataset_key(sf_dir))):
-        key = (_norm_key(dkey), "text", "lang", NB_TOP_V)
-        path = _sidecar_path(key)
-        if not os.path.exists(path):
-            raise FileNotFoundError(
-                f"naive-bayes swap sidecar v{ver} missing: {path} — run "
-                f"the stream_nb_model_swap query once at {sf_dir} to fit "
-                "and persist both versions"
-            )
-        with open(path) as f:
-            models.append(json.load(f))
+    models = [
+        sidecars.committed(
+            "nb", (dkey, "text", "lang", NB_TOP_V), "stream_nb_model_swap"
+        )
+        for dkey in (sf_dir, nb_swap_v2_dataset_key(sf_dir))
+    ]
 
     ctes1, pred1 = _nb_scoring_ctes(models[0], "1")
     ctes2, pred2 = _nb_scoring_ctes(models[1], "2")

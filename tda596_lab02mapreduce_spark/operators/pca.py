@@ -31,31 +31,12 @@ training-data band (SURVEY.md §2C similarity rows).
 
 from __future__ import annotations
 
-import hashlib
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tda596_lab02mapreduce_spark import sidecars
+
 _Q_SCALE = 1 << 20  # power of two: exact multiply for float32 inputs
-
-_PCA_MODEL_CACHE: dict[tuple, dict] = {}
-
-
-def _model_cache_dir() -> str:
-    default = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".models",
-    )
-    return os.environ.get("SPARK_GRAFT_MODEL_DIR", default)
-
-
-def _sidecar_path(key: tuple) -> str:
-    return os.path.join(
-        _model_cache_dir(),
-        "pca_" + hashlib.sha256(repr(key).encode()).hexdigest()[:16] + ".json",
-    )
 
 
 def pca_fit(
@@ -69,19 +50,12 @@ def pca_fit(
 ) -> dict:
     """Fit (or fetch) the PCA model: ``{"mean_q": [dim ints],
     "w_q": [n_components][dim ints]}`` — both floor(x * 2^20)
-    quantized.  With ``dataset_key`` the model is memoized in-process
-    and persisted as a JSON sidecar (fit-once/serve-many)."""
+    quantized.  With ``dataset_key`` the model is served from (and
+    published to) the sidecar store (fit-once/serve-many)."""
     key = (dataset_key, vec_col, dim, n_components)
     if dataset_key is not None and not refit:
-        if key in _PCA_MODEL_CACHE:
-            return _PCA_MODEL_CACHE[key]
-        path = _sidecar_path(key)
-        if os.path.exists(path):
-            with open(path) as f:
-                model = json.load(f)
-            model["mean_q"] = [int(x) for x in model["mean_q"]]
-            model["w_q"] = [[int(x) for x in row] for row in model["w_q"]]
-            _PCA_MODEL_CACHE[key] = model
+        model = sidecars.load("pca", key)
+        if model is not None:
             return model
 
     import numpy as np
@@ -126,13 +100,7 @@ def pca_fit(
         "total_var": float(eigvals.sum()),
     }
     if dataset_key is not None:
-        _PCA_MODEL_CACHE[key] = model
-        os.makedirs(_model_cache_dir(), exist_ok=True)
-        path = _sidecar_path(key)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(model, f)
-        os.replace(tmp, path)  # atomic publish (the sink discipline)
+        sidecars.save("pca", key, model)
     return model
 
 
@@ -183,17 +151,9 @@ def pca_oracle_sql(
     """DuckDB replay of the projection against the committed sidecar:
     the identical quantized-integer model as a literal table, the
     identical BIGINT dot product."""
-    key = (sf_dir, vec_col, dim, n_components)
-    path = _sidecar_path(key)
-    if not os.path.exists(path):
-        raise FileNotFoundError(
-            f"canonical pca model sidecar missing: {path} — run the "
-            f"embedding_pca_project query once at {sf_dir} to fit and "
-            "persist it (the committed .models/ files are the "
-            "canonical serving models)"
-        )
-    with open(path) as f:
-        model = json.load(f)
+    model = sidecars.committed(
+        "pca", (sf_dir, vec_col, dim, n_components), "embedding_pca_project"
+    )
     wrows = ",\n".join(
         f"({d}, {i}, {int(model['w_q'][d][i])}, {int(model['mean_q'][i])})"
         for d in range(len(model["w_q"]))

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from tda596_lab02mapreduce_spark import sidecars
 from tda596_lab02mapreduce_spark.functions.vector import cosine_sim
 
 
@@ -271,34 +272,6 @@ def kmeans_centroids(
 
 IvfModel = list[tuple[int, list[float]]]
 
-# fit-once-reuse: model cache keyed by (dataset key, params). At 100 TB
-# the coarse quantizer is fit offline once and served to every query;
-# refitting per invocation (3 Lloyd passes over the corpus) was round
-# 1's scale anti-pattern (VERDICT §What's wrong #4). In-memory memo for
-# same-process reuse + JSON sidecar for cross-process reuse. Stale-on-
-# data-change is the standard ANN-index contract: rebuilding the corpus
-# requires rebuilding the index (pass refit=True).
-_IVF_MODEL_CACHE: dict[tuple, IvfModel] = {}
-
-
-def _model_cache_dir() -> str:
-    import os
-
-    default = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".models",
-    )
-    return os.environ.get("SPARK_GRAFT_MODEL_DIR", default)
-
-
-def _sidecar_path(prefix: str, key: tuple) -> str:
-    import os
-
-    return os.path.join(
-        _model_cache_dir(),
-        prefix + "_" + hashlib.sha256(repr(key).encode()).hexdigest()[:16] + ".json",
-    )
-
 
 def ivf_fit(
     corpus: DataFrame,
@@ -311,24 +284,19 @@ def ivf_fit(
     dataset_key: str | None = None,
     refit: bool = False,
 ) -> IvfModel:
-    """Fit (or fetch) the IVF coarse quantizer. With ``dataset_key``
-    (e.g. the sf_dir path) the k×dim model is memoized in-process and
-    persisted as a JSON sidecar under ``$SPARK_GRAFT_MODEL_DIR``
-    (default ``<repo>/.models``), so repeated queries — and fresh
-    processes — probe a prebuilt model instead of re-running Lloyd."""
-    import json
-    import os
-
+    """Fit (or fetch) the IVF coarse quantizer (fit-once/serve-many:
+    at 100 TB the quantizer is fit offline once and served to every
+    query; refitting per invocation was round 1's scale anti-pattern).
+    With ``dataset_key`` (e.g. the sf_dir path) the k×dim model is
+    served from (and published to) the sidecar store, so repeated
+    queries — and fresh processes — probe a prebuilt model instead of
+    re-running Lloyd. Stale-on-data-change is the standard ANN-index
+    contract: rebuilding the corpus requires ``refit=True``."""
     key = (dataset_key, vec_col, id_col, n_cells, kmeans_iters, train_fraction)
     if dataset_key is not None and not refit:
-        if key in _IVF_MODEL_CACHE:
-            return _IVF_MODEL_CACHE[key]
-        path = _sidecar_path("ivf", key)
-        if os.path.exists(path):
-            with open(path) as f:
-                model = [(int(c), [float(x) for x in v]) for c, v in json.load(f)]
-            _IVF_MODEL_CACHE[key] = model
-            return model
+        model = sidecars.load("ivf", key)
+        if model is not None:
+            return [(c, v) for c, v in model]  # JSON gives [c, v] lists
     cents = kmeans_centroids(
         corpus,
         vec_col=vec_col,
@@ -339,22 +307,8 @@ def ivf_fit(
     )
     model = [(int(r["cell"]), list(r["centroid"])) for r in cents.collect()]
     if dataset_key is not None:
-        _IVF_MODEL_CACHE[key] = model
-        os.makedirs(_model_cache_dir(), exist_ok=True)
-        path = _sidecar_path("ivf", key)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(model, f)
-        os.replace(tmp, path)  # atomic publish, same tmp+rename as the sinks
+        sidecars.save("ivf", key, model)
     return model
-
-
-# serving-path index cache: the ASSIGNED corpus (id, vec, cell) is the
-# inverted file itself — at 100 TB it is a stored table partitioned by
-# cell (built once with the model, like any ANN index); the in-process
-# persist() below is the local-mode stand-in, keyed per Spark app so a
-# stopped session's DataFrame is never served to a new one.
-_IVF_ASSIGNED_CACHE: dict[tuple, DataFrame] = {}
 
 
 def ivf_topk(
@@ -369,7 +323,6 @@ def ivf_topk(
     kmeans_iters: int = 3,
     train_fraction: float | None = None,
     model: IvfModel | None = None,
-    dataset_key: str | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: the classic ANN scale path
     (Faiss IVF-Flat shape). Corpus is partitioned once into n_cells by a
@@ -379,11 +332,10 @@ def ivf_topk(
 
     ``model`` is the fit/probe split: pass ``ivf_fit(...)`` output to
     probe a prebuilt quantizer (the serving path); omitting it fits
-    inline (the one-shot path, used by recall tests).  With
-    ``dataset_key`` the ASSIGNED corpus (the inverted file) is also
-    cached and persisted in-process, so repeated probes skip the
-    per-row argmin re-assignment entirely — the full ANN index-once/
-    query-many shape.
+    inline (the one-shot path, used by recall tests).  The corpus
+    assignment (the inverted file) is a map-only argmin recomputed per
+    call — at 100 TB it would be a stored table partitioned by cell,
+    built once with the model; no DataFrame is kept between calls.
 
     Same output shape as brute_force_topk; recall is pytest-asserted
     (tests/test_dedup.py), driver check is rows-only."""
@@ -397,34 +349,11 @@ def ivf_topk(
     )
     cent_lit = _centroid_literal(cent_rows)
 
-    # corpus assignment: map-only argmin against the literal centroids;
-    # cached per (app, dataset, params, MODEL). The model fingerprint is
-    # part of the key: a refit (or a fit with different iters/fraction)
-    # produces new centroids, and serving assignments computed from the
-    # OLD quantizer against the new one would silently return
-    # wrong/low-recall neighbors (ADVICE r8 #1). Hashing the centroid
-    # values themselves makes the cache exact w.r.t. model identity, no
-    # matter how the model was obtained.
-    akey = None
-    if dataset_key is not None:
-        model_fp = hashlib.sha256(repr(cent_rows).encode()).hexdigest()[:16]
-        akey = (
-            corpus.sparkSession.sparkContext.applicationId,
-            dataset_key,
-            vec_col,
-            id_col,
-            n_cells,
-            model_fp,
-        )
-    c_assigned = _IVF_ASSIGNED_CACHE.get(akey) if akey is not None else None
-    if c_assigned is None:
-        c_assigned = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("__cvec"),
-        ).withColumn("cell", _nearest_cell("__cvec", cent_lit))
-        if akey is not None:
-            c_assigned = c_assigned.persist()
-            _IVF_ASSIGNED_CACHE[akey] = c_assigned
+    # corpus assignment: map-only argmin against the literal centroids
+    c_assigned = corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).cast("array<double>").alias("__cvec"),
+    ).withColumn("cell", _nearest_cell("__cvec", cent_lit))
 
     # each query probes its n_probe nearest cells — row-local: sort the
     # k (d2, cell) scores in-row and explode the first n_probe
@@ -591,8 +520,6 @@ def lsh_topk(
 
 PqModel = list  # [subspace][code] -> centroid subvector (list[float])
 
-_PQ_MODEL_CACHE: dict[tuple, "PqModel"] = {}
-
 
 def pq_fit(
     corpus: DataFrame,
@@ -615,24 +542,14 @@ def pq_fit(
     deterministic stand-in for Faiss's shuffled subsample), because a
     codebook needs only enough points per code to place centroids; the
     collect moves n_train×D floats ONCE, never the corpus.  Encoding
-    and probing (pq_topk) stay fully distributed.  Same memo + JSON
-    sidecar protocol as ivf_fit — fit-once/serve-many."""
-    import json
-    import os
-
+    and probing (pq_topk) stay fully distributed.  Same sidecar-store
+    protocol as ivf_fit — fit-once/serve-many."""
     import numpy as np
 
     key = (dataset_key, vec_col, id_col, m, k, iters, n_train)
-    path = _sidecar_path("pq", key)
     if dataset_key is not None and not refit:
-        if key in _PQ_MODEL_CACHE:
-            return _PQ_MODEL_CACHE[key]
-        if os.path.exists(path):
-            with open(path) as f:
-                model = [
-                    [[float(x) for x in c] for c in sub] for sub in json.load(f)
-                ]
-            _PQ_MODEL_CACHE[key] = model
+        model = sidecars.load("pq", key)
+        if model is not None:
             return model
 
     rows = (
@@ -661,12 +578,7 @@ def pq_fit(
         model.append([[float(v) for v in c] for c in cents])
 
     if dataset_key is not None:
-        _PQ_MODEL_CACHE[key] = model
-        os.makedirs(_model_cache_dir(), exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(model, f)
-        os.replace(tmp, path)
+        sidecars.save("pq", key, model)
     return model
 
 
@@ -840,7 +752,7 @@ def pq_topk(
 # pure deterministic arithmetic GIVEN the fitted model.  The canonical
 # serving models are the committed JSON sidecars under .models/ (the
 # same files ivf_fit/pq_fit consult before refitting), so both engines
-# replay the identical model: Spark loads it through the fit cache,
+# replay the identical model: Spark loads it from the sidecar store,
 # DuckDB gets it embedded as a literal table by the builders below.
 # Bit-exactness argument: every float reduction on the Spark side is a
 # strict left fold (F.aggregate seeded 0.0); DuckDB's list_reduce seeds
@@ -852,22 +764,6 @@ def pq_topk(
 # ---------------------------------------------------------------------------
 
 CORRECTNESS_SF = "/root/testdata/sf0.01"
-
-
-def _load_sidecar(prefix: str, key: tuple):
-    import json
-    import os
-
-    path = _sidecar_path(prefix, key)
-    if not os.path.exists(path):
-        raise FileNotFoundError(
-            f"canonical {prefix} model sidecar missing: {path} — run the "
-            f"corresponding similarity_{prefix}_topk query once at "
-            f"{key[0]} to fit and persist it (the committed .models/ "
-            "files are the canonical serving models)"
-        )
-    with open(path) as f:
-        return json.load(f)
 
 
 def _sql_double(x: float) -> str:
@@ -892,8 +788,10 @@ def ivf_oracle_sql(
     sidecar model: argmin-L2 cell assignment (tie → lowest cell) for
     the corpus, n_probe nearest cells per query (vec_id < 10), exact
     cosine within probed cells, top-k by (cosine DESC, neighbor_id)."""
-    model = _load_sidecar(
-        "ivf", (sf_dir, vec_col, id_col, n_cells, kmeans_iters, train_fraction)
+    model = sidecars.committed(
+        "ivf",
+        (sf_dir, vec_col, id_col, n_cells, kmeans_iters, train_fraction),
+        "similarity_ivf_topk",
     )
     rows = ",\n".join(
         f"({int(c)}, [{', '.join(_sql_double(x) for x in v)}]::DOUBLE[])"
@@ -958,8 +856,10 @@ def pq_oracle_sql(
     sidecar codebooks: per-subspace argmin encoding (tie → lowest
     code), per-query LUT, ADC = j-ordered left-fold sum rounded to
     6 dp, top-``refine`` shortlist, exact-L2 re-rank to top-``k``."""
-    model = _load_sidecar(
-        "pq", (sf_dir, vec_col, id_col, m, k_codes, iters, n_train)
+    model = sidecars.committed(
+        "pq",
+        (sf_dir, vec_col, id_col, m, k_codes, iters, n_train),
+        "similarity_pq_topk",
     )
     d = dim // m
     rows = ",\n".join(

@@ -526,8 +526,9 @@ def similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "joins + one equi-join on cell id — at 100 TB the cell column "
         "doubles as the physical partition key. Fit/probe split: the "
         "quantizer is fit once per (dataset, params) via ivf_fit and "
-        "cached (memory + JSON sidecar), so this query is probe-only "
-        "after the first build — the ANN serving shape."
+        "published as a JSON sidecar (sidecars.py), so this "
+        "query is assign-and-probe only after the first build — "
+        "the ANN serving shape; no DataFrame is cached across calls."
     ),
     tags=("similarity",),
 )
@@ -537,9 +538,7 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     model = sim.ivf_fit(
         emb, n_cells=8, kmeans_iters=3, train_fraction=0.2, dataset_key=sf_dir
     )
-    return sim.ivf_topk(
-        emb, queries, k=5, n_cells=8, n_probe=3, model=model, dataset_key=sf_dir
-    )
+    return sim.ivf_topk(emb, queries, k=5, n_cells=8, n_probe=3, model=model)
 
 
 @register(
@@ -2004,8 +2003,8 @@ def _pq_refine(sf_dir: str) -> int:
         "per slot), while 3√n holds ≥0.85 at every measured scale at "
         "sublinear re-rank cost (q×3√n exact distances, vs the q×0.05n "
         "a linear fraction would cost at 100 TB).  Codebooks fit "
-        "in-memory on a bounded deterministic sample and cached via "
-        "the ivf_fit memo+sidecar protocol — fit-once/serve-many.  "
+        "in-memory on a bounded deterministic sample and published "
+        "through the ivf_fit sidecar store — fit-once/serve-many.  "
         "Recall@5 floor asserted in tests/test_dedup.py, "
         "staging-parameterized via SPARK_GRAFT_ANN_DIR; rows-only by "
         "the seeded/approximate contract."
@@ -2568,8 +2567,8 @@ def naive_bayes_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = io.load(spark, sf_dir, "documents")
     # refit=True: the registered query ALWAYS re-runs the distributed
-    # fit (bench honesty — the bpe_train_merges use_cache=False
-    # discipline; a cached replay would time serve-only). The fit is
+    # fit (bench honesty — bpe_train_merges always re-runs its rounds
+    # too; a sidecar replay would time serve-only). The fit is
     # deterministic, so the re-persisted sidecar is byte-stable and the
     # committed .models/ files stay canonical for the oracle.
     model = naive_bayes_fit(docs, dataset_key=sf_dir, refit=True)

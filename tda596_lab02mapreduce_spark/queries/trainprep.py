@@ -1405,28 +1405,16 @@ GROUP BY source"""
     )
 
 
-_BPE_FRAMES_CACHE: dict[tuple, tuple] = {}
-
-
 def _bpe_train_frames(
-    spark: SparkSession, sf_dir: str, rounds: int, *, use_cache: bool = True
+    spark: SparkSession, sf_dir: str, rounds: int
 ) -> tuple[list[DataFrame], DataFrame]:
     """Shared fixed-round BPE trainer: returns (one 1-row merge DF per
     round with columns round/left_sym/right_sym/merged_sym/pair_count,
     the final per-word segmentation (word, enc, freq)).
 
-    Fit/serve split (the kmeans _KMEANS_MODEL_CACHE discipline, with
-    one asymmetry): the SERVE twin (bpe_encode_token_stats) reuses the
-    pinned trajectory via the cache; the TRAINER (bpe_train_merges)
-    passes use_cache=False so it ALWAYS re-runs the 3 rounds — it is
-    the fit, and a benchmark timing it must measure the training loop,
-    not a replay of three checkpointed 1-row frames. The fresh fit
-    still refreshes the cache for any later serve in the session."""
-    key = (spark.sparkContext.applicationId, sf_dir, rounds)
-    if use_cache:
-        hit = _BPE_FRAMES_CACHE.get(key)
-        if hit is not None:
-            return hit
+    Both the TRAINER (bpe_train_merges) and the SERVE twin
+    (bpe_encode_token_stats) re-run the deterministic rounds on every
+    call: no checkpointed frame is kept between queries."""
     docs = io.widen_if_few_splits(io.load(spark, sf_dir, "documents"), "doc_id")
     wf = (
         docs.select(F.explode(tokens_nonempty("text")).alias("word"))
@@ -1514,7 +1502,6 @@ def _bpe_train_frames(
         syms = syms.unionAll(
             top.select(F.lit(mid).alias("id"), F.concat("ls", "rs").alias("s"))
         )
-    _BPE_FRAMES_CACHE[key] = (tops, enc)
     return tops, enc
 
 
@@ -1546,9 +1533,7 @@ def _bpe_train_frames(
     tags=("text", "llm", "agg"),
 )
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the FIT: always re-run the rounds (bench honesty — see
-    # _bpe_train_frames); refreshes the serve twin's cache
-    tops, _ = _bpe_train_frames(spark, sf_dir, _BPE_ROUNDS, use_cache=False)
+    tops, _ = _bpe_train_frames(spark, sf_dir, _BPE_ROUNDS)
     out = tops[0]
     for t in tops[1:]:
         out = out.unionAll(t)

@@ -23,16 +23,8 @@ import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-def _events_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
-    """FileStreamSource needs an explicit schema, but the fixture's ts
-    physical type has drifted across generations (TIMESTAMP(NANOS) →
-    int64 under nanosAsLong; TIMESTAMP(MICROS, ntz) → TIMESTAMP_NTZ).
-    Read the footer via a one-file batch scan and reuse exactly what
-    the batch path sees, so batch-vs-stream invariance holds by
-    construction whatever the generation."""
-    return spark.read.parquet(f"{sf_dir}/events.parquet").schema
+from tda596_lab02mapreduce_spark import io
 
 
 def _as_stream_dir(sf_dir: str, table: str, *, copies: int = 1) -> str:
@@ -94,11 +86,21 @@ def table_stream(
     copies: int = 1,
     max_files: int | None = None,
 ) -> DataFrame:
-    """Any fixture table as a file stream (the events_stream staging
-    generalized): footer-derived schema so batch-vs-stream invariance
-    holds by construction, symlink directory staging, the
-    SPARK_GRAFT_STREAM_MAX_FILES multi-batch knob. No ts coercion —
-    callers needing the events ts generations use events_stream.
+    """Any fixture table as a file stream. FileStreamSource needs an
+    explicit schema: it is read from the footer via a one-file batch
+    scan, so the stream sees exactly what the batch path sees (the
+    events ts physical type has drifted across fixture generations)
+    and batch-vs-stream invariance holds by construction. Symlink
+    directory staging. No ts coercion — events callers use
+    events_stream.
+
+    ``SPARK_GRAFT_STREAM_MAX_FILES`` (scale-probe knob): cap files per
+    micro-batch so a multi-file staging drains in MANY batches instead
+    of one — the shape that exercises cross-batch state carry and
+    watermark eviction. Only honest when the staged part files are
+    time-range-partitioned and mtime-ordered (tools/scale_stress.py's
+    stream staging); the single-file fixtures ignore it (1 file = 1
+    batch either way).
 
     ``copies``/``max_files``: explicit multi-batch staging for
     queries whose SEMANTICS need a deterministic batch count (the
@@ -119,30 +121,13 @@ def table_stream(
 
 def events_stream(spark: SparkSession, sf_dir: str, *, copies: int = 1) -> DataFrame:
     """The events table as a file stream (one-file directory;
-    AvailableNow trigger drains it in one run). ``copies=2`` feeds
-    every event twice — the duplicated-source shape the streaming
-    dedup queries must collapse.
-
-    ``SPARK_GRAFT_STREAM_MAX_FILES`` (scale-probe knob): cap files per
-    micro-batch so a multi-file staging drains in MANY batches instead
-    of one — the shape that exercises cross-batch state carry and
-    watermark eviction. Only honest when the staged part files are
-    time-range-partitioned and mtime-ordered (tools/scale_stress.py's
-    stream staging); the single-file fixtures ignore it (1 file = 1
-    batch either way)."""
-    reader = spark.readStream.schema(_events_schema(spark, sf_dir)).format(
-        "parquet"
+    AvailableNow trigger drains it in one run), ts normalized exactly
+    as io.load does. ``copies=2`` feeds every event twice — the
+    duplicated-source shape the streaming dedup queries must
+    collapse."""
+    return io.normalize_events_ts(
+        table_stream(spark, sf_dir, "events", copies=copies)
     )
-    mft = os.environ.get("SPARK_GRAFT_STREAM_MAX_FILES")
-    if mft:
-        reader = reader.option("maxFilesPerTrigger", int(mft))
-    raw = reader.load(_as_stream_dir(sf_dir, "events", copies=copies))
-    ts_type = raw.schema["ts"].dataType
-    if isinstance(ts_type, T.LongType):  # TIMESTAMP(NANOS) generation
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(ts_type, T.TimestampNTZType):
-        raw = raw.withColumn("ts", F.to_utc_timestamp("ts", "UTC"))
-    return raw
 
 
 def tumbling_agg(events: DataFrame, *, width: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
