@@ -3,9 +3,11 @@
 The ten driver-generated parquet tables. ``load`` returns a DataFrame
 per table; ``register_views`` exposes all of them as temp views so
 SQL-shaped queries mirror the DuckDB oracle exactly. Reading is plain
-``spark.read.parquet`` — Catalyst owns predicate pushdown, column
-pruning, and partition-split sizing (``maxPartitionBytes``); at 100 TB
-the same call simply fans out over more splits.
+``spark.read.parquet``: Catalyst owns predicate pushdown, column
+pruning and split sizing, and at 100 TB the same call simply fans out
+over more splits. ``widen_if_few_splits`` reads that split count back
+from the scan in the frame's physical plan rather than re-deriving it,
+so it follows every split conf Spark does and needs no file sizes.
 """
 
 from __future__ import annotations
@@ -102,106 +104,6 @@ def register_views(
         load(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def _parse_byte_conf(v: str) -> int:
-    """Parse Spark size-conf strings ("134217728", "134217728b",
-    "128m", "1g", "1t") — the suffix set JavaUtils.byteStringAs
-    accepts. Raises ValueError on anything else; the caller falls back
-    to the RDD probe rather than failing the query."""
-    s = v.strip().lower()
-    mult = 1
-    for suffix, m in (
-        ("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-        ("tb", 1 << 40), ("pb", 1 << 50),
-        ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
-        ("t", 1 << 40), ("p", 1 << 50), ("b", 1),
-    ):
-        if s.endswith(suffix):
-            s = s[: -len(suffix)]
-            mult = m
-            break
-    return int(s) * mult
-
-
-_SCAN_SPLITS_CACHE: dict[tuple, int] = {}
-
-
-def _probe_cached(df: DataFrame, files: list[str]) -> int:
-    """RDD-probe fallback, memoized per file set so the conversion cost
-    is paid once per process even on paths the estimator can't size."""
-    key = ("__rdd_probe__", tuple(sorted(files)))
-    n = _SCAN_SPLITS_CACHE.get(key)
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        _SCAN_SPLITS_CACHE[key] = n
-    return n
-
-
-def _estimated_scan_splits(df: DataFrame) -> int:
-    """Scan partition count from the FILE LISTING, not ``df.rdd``.
-
-    ``df.rdd.getNumPartitions()`` materializes an RDD conversion on the
-    driver per call (VERDICT r5 "what's wrong" #3) — inside every
-    registered query that widens. Instead replicate the sizing math of
-    Spark's FilePartition.getFilePartitions from ``df.inputFiles()`` +
-    os.path.getsize:
-
-        maxSplitBytes = min(maxPartitionBytes,
-                            max(openCostInBytes, totalBytes/parallelism))
-        splits ≈ ceil(Σ(size_i + openCost) / maxSplitBytes)
-
-    Memoized per (file set, sizing confs); falls back to the RDD probe
-    for non-file-backed plans (none of the registered queries hit it).
-    """
-    spark = df.sparkSession
-    files = df.inputFiles()
-    if not files:
-        return df.rdd.getNumPartitions()
-    try:
-        max_part = _parse_byte_conf(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-        )
-        open_cost = _parse_byte_conf(
-            spark.conf.get("spark.sql.files.openCostInBytes", "4194304b")
-        )
-    except ValueError:
-        return _probe_cached(df, files)  # exotic size conf: RDD probe
-    parallelism = spark.sparkContext.defaultParallelism
-    # sizes participate in the memo key, so an in-place rewrite of the
-    # same file names (regenerated fixtures, overwritten output dir)
-    # invalidates the cached count; getsize per call is microseconds.
-    sizes = []
-    for f in files:
-        path = f.removeprefix("file://")
-        try:
-            sizes.append(os.path.getsize(path))
-        except OSError:
-            return _probe_cached(df, files)  # remote FS
-    key = (tuple(sorted(files)), tuple(sorted(sizes)), max_part, open_cost, parallelism)
-    cached = _SCAN_SPLITS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    total = sum(s + open_cost for s in sizes)
-    max_split = max(1, min(max_part, max(open_cost, total // max(parallelism, 1))))
-    # chop each file into ≤max_split chunks, then greedy-pack largest
-    # first with open_cost padding — FilePartition.getFilePartitions
-    chunks: list[int] = []
-    for s in sizes:
-        chunks.extend([max_split] * (s // max_split))
-        if s % max_split or s == 0:
-            chunks.append(s % max_split)
-    chunks.sort(reverse=True)
-    n = cur = 0
-    for c in chunks:
-        if cur + c > max_split and cur > 0:
-            n += 1
-            cur = 0
-        cur += c + open_cost
-    n += 1 if cur > 0 else 0
-    n = max(1, n)
-    _SCAN_SPLITS_CACHE[key] = n
-    return n
-
-
 def widen_if_few_splits(df: DataFrame, *key_cols: str) -> DataFrame:
     """Decouple CPU parallelism from input-split count.
 
@@ -215,6 +117,15 @@ def widen_if_few_splits(df: DataFrame, *key_cols: str) -> DataFrame:
     no-op — the extra shuffle exists precisely and only in the
     few-split regime where it pays for itself.
 
+    ``df`` is one file scan, optionally filtered or projected. Its split
+    count is the partition count of the scan leaf of its physical plan
+    (``FileSourceScanExec.inputRDD``): the tasks Spark will run, as
+    ``FilePartition`` packed them under the session's split confs
+    (``maxPartitionBytes``, ``openCostInBytes``, ``minPartitionNum``,
+    ``maxPartitionNum``, ``leafNodeDefaultParallelism``). Asking plans
+    the frame and packs the file listing cached when it was read; it
+    runs no job and keeps nothing between calls.
+
     ``key_cols`` must be high-cardinality: a keyed repartition survives
     optimization, while a round-robin one under an Aggregate is
     eliminated as redundant (observed: the optimizer drops it and the
@@ -227,8 +138,8 @@ def widen_if_few_splits(df: DataFrame, *key_cols: str) -> DataFrame:
         # comparisons across scales read as drift. Disabling it isolates
         # the optimizer's own decisions. Never set for timed runs.
         return df
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if _estimated_scan_splits(df) < target:
+    target = df.sparkSession.sparkContext.defaultParallelism
+    scan = df._jdf.queryExecution().sparkPlan().collectLeaves().head()
+    if scan.inputRDD().getNumPartitions() < target:
         return df.repartition(target, *key_cols)
     return df

@@ -216,7 +216,7 @@ def naive_bayes_oracle_sql(
     free — out-of-vocabulary tokens drop at the inner join exactly as
     in the Spark serve."""
     model = sidecars.committed(
-        "nb", (sf_dir, text_col, label_col, top_v), "naive_bayes_lang_confusion"
+        "nb", (sf_dir, text_col, label_col, top_v), "stream_nb_classify"
     )
     ctes, pred = _nb_scoring_ctes(model, "")
     return f"""

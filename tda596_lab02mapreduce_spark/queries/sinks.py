@@ -86,8 +86,8 @@ GROUP BY o_orderstatus
 def sink_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = io.load(spark, sf_dir, "orders")
     path = _sink_path(sf_dir, "orders_by_status")
-    sources.write_parquet(orders, path, partition_by=["o_orderstatus"])
-    back = sources.read_parquet(spark, path)
+    orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
+    back = spark.read.parquet(path)
     return back.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
@@ -172,7 +172,7 @@ def source_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs.repartition(64).write.mode("overwrite").parquet(frag)
     sources.compact_parquet(spark, frag, compacted, target_rows_per_file=120)
     n_files = len(glob.glob(f"{compacted}/part-*"))
-    back = sources.read_parquet(spark, compacted)
+    back = spark.read.parquet(compacted)
     return back.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("doc_id").alias("n_docs"),
@@ -350,8 +350,8 @@ GROUP BY p_brand
 def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = io.load(spark, sf_dir, "part")
     path = _sink_path(sf_dir, "part_orc")
-    sources.write_orc(part, path)
-    back = sources.read_orc(spark, path)
+    part.write.mode("overwrite").orc(path)
+    back = spark.read.orc(path)
     return back.groupBy("p_brand").agg(
         F.count(F.lit(1)).alias("n_parts"),
         F.sum(F.col("p_retailprice").cast("decimal(18,2)"))
@@ -437,7 +437,7 @@ GROUP BY s_nationkey
 def sink_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = io.load(spark, sf_dir, "supplier")
     path = _sink_path(sf_dir, "supplier_json")
-    sources.write_json(supp, path)
+    supp.write.mode("overwrite").json(path)
     back = sources.read_json(
         spark,
         path,
@@ -868,7 +868,7 @@ def sink_codec_zstd_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     sup = io.load(spark, sf_dir, "supplier")
     path = _sink_path(sf_dir, "supplier_zstd")
     sup.write.mode("overwrite").option("compression", "zstd").parquet(path)
-    back = sources.read_parquet(spark, path)
+    back = spark.read.parquet(path)
     return back.groupBy("s_nationkey").agg(
         F.count(F.lit(1)).alias("n_suppliers"),
         F.sum(F.col("s_acctbal").cast("decimal(18,2)"))

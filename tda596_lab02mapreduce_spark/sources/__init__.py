@@ -4,15 +4,10 @@ from tda596_lab02mapreduce_spark.sources.files import (
     read_json,
     avro_available,
     read_avro,
-    read_orc,
-    read_parquet,
     read_text_lines,
     read_whole_files,
     write_csv,
-    write_json,
     write_avro,
-    write_orc,
-    write_parquet,
 )
 
 __all__ = [
@@ -21,13 +16,8 @@ __all__ = [
     "read_json",
     "avro_available",
     "read_avro",
-    "read_orc",
-    "read_parquet",
     "read_text_lines",
     "read_whole_files",
     "write_csv",
-    "write_json",
     "write_avro",
-    "write_orc",
-    "write_parquet",
 ]

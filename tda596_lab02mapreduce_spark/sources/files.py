@@ -11,6 +11,10 @@ built in).
 granularity — (filename, contents), one row per file — for the
 MapReduce façade. Line-granularity ``read_text_lines`` is the
 scalable default (a 10 GB file splits across executors).
+
+Formats with nothing to configure (parquet, ORC, JSON out) are read
+and written with ``spark.read`` / ``df.write`` directly; the helpers
+here set reader options (CSV, JSON in) or check for a connector (Avro).
 """
 
 from __future__ import annotations
@@ -68,25 +72,6 @@ def read_json(
     return reader.json(path)
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — same columnar pushdown/pruning properties as parquet
-    (both go through the vectorized FileSourceScan path)."""
-    return spark.read.orc(path)
-
-
-def write_orc(
-    df: DataFrame, path: str, *, mode: str = "overwrite", partition_by: list[str] | None = None
-) -> None:
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
-
-
 def avro_available(spark: SparkSession) -> bool:
     """True when the spark-avro SQL connector is on the classpath.
 
@@ -139,21 +124,8 @@ def write_avro(
     w.format("avro").save(path)
 
 
-def write_parquet(
-    df: DataFrame, path: str, *, mode: str = "overwrite", partition_by: list[str] | None = None
-) -> None:
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
 def write_csv(df: DataFrame, path: str, *, mode: str = "overwrite", sep: str = ",") -> None:
     df.write.mode(mode).option("header", "true").option("sep", sep).csv(path)
-
-
-def write_json(df: DataFrame, path: str, *, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
 
 
 def compact_parquet(

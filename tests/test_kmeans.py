@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tda596_lab02mapreduce_spark import io
+from tda596_lab02mapreduce_spark import io, sidecars
 from tda596_lab02mapreduce_spark.operators.kmeans import (
     kmeans_assign,
     kmeans_fit,
@@ -48,10 +48,17 @@ def test_trunc_div_exact_beyond_double_precision():
     assert _trunc_div(s, 1) == s  # the fix
 
 
-def test_kmeans_nondegenerate_and_deterministic(spark, sf_correctness):
+def test_kmeans_nondegenerate_and_deterministic(
+    spark, sf_correctness, tmp_path, monkeypatch
+):
     emb = io.load(spark, sf_correctness, "embeddings")
     n = emb.count()
-    model = kmeans_fit(emb, dataset_key=sf_correctness)
+    monkeypatch.delenv("SPARK_GRAFT_MODEL_DIR", raising=False)
+    model = sidecars.committed(
+        "kmeans",
+        (sf_correctness, "embedding", 64, 8, 4),
+        "embedding_kmeans_assign",
+    )
     assigned = kmeans_assign(emb, model)
     sizes = {
         int(r["cluster"]): int(r["n"])
@@ -61,7 +68,9 @@ def test_kmeans_nondegenerate_and_deterministic(spark, sf_correctness):
     assert len(sizes) > 1
     assert max(sizes.values()) < n
     assert sum(sizes.values()) == n
-    # integer fit is deterministic: refit reproduces the sidecar exactly
+    # integer fit is deterministic: refit reproduces the committed
+    # sidecar exactly (published into a throwaway dir, not .models/)
+    monkeypatch.setenv("SPARK_GRAFT_MODEL_DIR", str(tmp_path))
     refit = kmeans_fit(emb, dataset_key=sf_correctness, refit=True)
     assert refit["centroids_q"] == model["centroids_q"]
 

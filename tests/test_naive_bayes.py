@@ -12,16 +12,18 @@ real one (several classes actually predicted, scores vary)."""
 from __future__ import annotations
 
 import math
+import os
 
 from pyspark.sql import functions as F
 
-from tda596_lab02mapreduce_spark import io
+from tda596_lab02mapreduce_spark import io, sidecars
 from tda596_lab02mapreduce_spark.operators.naive_bayes import (
     _LAST_FIT_STATS,
     NB_TOP_V,
     naive_bayes_confusion,
     naive_bayes_fit,
 )
+from tda596_lab02mapreduce_spark.registry import get
 
 
 def test_nb_toy_weights_exact(spark):
@@ -62,10 +64,21 @@ def test_nb_argmax_tiebreak_lexical(spark):
     assert preds == {("m", "m"): 2, ("z", "m"): 2}
 
 
-def test_nb_fixture_nondegenerate_and_deterministic(spark, sf_correctness):
+def _committed_nb(sf_dir: str, monkeypatch) -> dict:
+    monkeypatch.delenv("SPARK_GRAFT_MODEL_DIR", raising=False)
+    return sidecars.committed(
+        "nb", (sf_dir, "text", "lang", NB_TOP_V), "stream_nb_classify"
+    )
+
+
+def test_nb_fixture_nondegenerate_and_deterministic(
+    spark, sf_correctness, tmp_path, monkeypatch
+):
     docs = io.load(spark, sf_correctness, "documents")
-    model = naive_bayes_fit(docs, dataset_key=sf_correctness)
-    # refit must reproduce the committed sidecar bit-for-bit
+    model = _committed_nb(sf_correctness, monkeypatch)
+    # refit must reproduce the committed sidecar bit-for-bit (published
+    # into a throwaway dir, not .models/)
+    monkeypatch.setenv("SPARK_GRAFT_MODEL_DIR", str(tmp_path))
     refit = naive_bayes_fit(docs, dataset_key=sf_correctness, refit=True)
     assert refit == model
     out = naive_bayes_confusion(docs, model)
@@ -78,14 +91,19 @@ def test_nb_fixture_nondegenerate_and_deterministic(spark, sf_correctness):
     assert len(rows) <= len(model["classes"]) ** 2
 
 
-def test_nb_vocab_cap_bounds_driver_traffic(spark, sf_correctness):
+def test_nb_vocab_cap_bounds_driver_traffic(
+    spark, sf_correctness, tmp_path, monkeypatch
+):
     """The r12-verdict #1 contract made code: the fit's vocabulary is
     the distributed top-V (V=24 < the 31-token fixture vocabulary, so
     the OOV path is exercised), and the driver receives EXACTLY V
     vocabulary rows and <= V*C count rows — never the full corpus
     vocabulary."""
     docs = io.load(spark, sf_correctness, "documents")
+    committed = _committed_nb(sf_correctness, monkeypatch)
+    monkeypatch.setenv("SPARK_GRAFT_MODEL_DIR", str(tmp_path))
     model = naive_bayes_fit(docs, dataset_key=sf_correctness, refit=True)
+    assert model == committed
     full_vocab = {
         r["t"]
         for r in docs.select(
@@ -140,3 +158,21 @@ def test_nb_scores_unseen_token_drops_identically(spark):
     out = naive_bayes_confusion(serve, m).collect()
     preds = {(r["true_lang"], r["pred_lang"]): r["n_docs"] for r in out}
     assert preds == {("x", "x"): 1}  # doc 11 dropped, doc 10 scored on 'a'
+
+
+def test_query_call_leaves_committed_sidecar_untouched(
+    spark, sf_correctness, monkeypatch
+):
+    """naive_bayes_lang_confusion refits on every call but publishes
+    nothing: the committed sidecar its oracle replays keeps its bytes
+    and its mtime."""
+    monkeypatch.delenv("SPARK_GRAFT_MODEL_DIR", raising=False)
+    path = sidecars.path("nb", (sf_correctness, "text", "lang", NB_TOP_V))
+
+    def snapshot():
+        with open(path, "rb") as f:
+            return os.stat(path).st_mtime_ns, f.read()
+
+    before = snapshot()
+    get("naive_bayes_lang_confusion").spark_fn(spark, sf_correctness).collect()
+    assert snapshot() == before
