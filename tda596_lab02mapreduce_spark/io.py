@@ -2,16 +2,36 @@
 
 The ten driver-generated parquet tables. ``load`` returns a DataFrame
 per table; ``register_views`` exposes all of them as temp views so
-SQL-shaped queries mirror the DuckDB oracle exactly. Reading is plain
-``spark.read.parquet``: Catalyst owns predicate pushdown, column
-pruning and split sizing, and at 100 TB the same call simply fans out
-over more splits. ``widen_if_few_splits`` reads that split count back
-from the scan in the frame's physical plan rather than re-deriving it,
-so it follows every split conf Spark does and needs no file sizes.
+SQL-shaped queries mirror the DuckDB oracle exactly.
+
+Every fixture file is read through the session catalog. ``table``
+resolves ``<sf_dir>/<name>.parquet`` to one EXTERNAL parquet table,
+``fixture_<name>_<sha1(path)[:12]>``, created on its first load in the
+session and read with ``spark.table`` after that. Creating it infers
+the schema once (one footer-reading job); every later read plans from
+the stored schema and the catalog's cached relation, with no inference
+job and no re-listing. What is reused is metadata only, the schema and
+the file listing, never rows. It lives in the catalog of the session's
+``SparkContext`` and ends with it. The table is external, so dropping
+it never touches the files, and nothing is written under ``sf_dir``.
+
+The contract this rests on: the files under an sf dir do not change
+while a session has them loaded. A writer that replaces a loaded file
+must call ``spark.catalog.refreshTable(name)`` before reading it again.
+No caller in this repo does: tests build fresh ``tmp_path`` sf dirs,
+and ``tools/scale_stress.py`` rmtree's and writes each output dir
+before it first reads it.
+
+Catalyst still owns predicate pushdown, column pruning and split
+sizing, and at 100 TB the same table simply fans out over more splits.
+``widen_if_few_splits`` reads that split count back from the scan in
+the frame's physical plan rather than re-deriving it, so it follows
+every split conf Spark does and needs no file sizes.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,17 +56,29 @@ def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", default)
 
 
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The raw fixture table ``name`` of ``sf_dir``, read through its
+    external catalog table (created here on first use; see the module
+    docstring)."""
     if name not in TABLES:
         raise KeyError(f"unknown fixture table {name!r}; known: {TABLES}")
     if name == "events":
         # events.ts is TIMESTAMP(NANOS) in parquet, which vanilla Spark
         # rejects (PARQUET_TYPE_ILLEGAL). nanosAsLong is a *runtime* SQL
-        # conf, so set it here — at read time — rather than relying on
-        # the session builder having done it: any caller-provided
-        # session (e.g. the correctness harness's default one) works.
+        # conf, so set it here — before the schema is inferred and
+        # before every read — rather than relying on the session builder
+        # having done it: any caller-provided session (e.g. the
+        # correctness harness's default one) works.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    catalog_name = f"fixture_{name}_{hashlib.sha1(path.encode()).hexdigest()[:12]}"
+    if not spark.catalog.tableExists(catalog_name):
+        spark.catalog.createTable(catalog_name, path=path, source="parquet")
+    return spark.table(catalog_name)
+
+
+def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    df = table(spark, sf_dir, name)
     return normalize_events_ts(df) if name == "events" else df
 
 

@@ -373,49 +373,29 @@ GROUP BY o_orderpriority
     tags=("join", "bucketed", "source"),
 )
 def join_bucketed_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
+    from tda596_lab02mapreduce_spark.queries.sinks import _sink_path
 
-    # pid in the table tag: two concurrent processes (bench + correctness
-    # run) could otherwise both see tableExists=false and one rmtree the
-    # files the other is scanning (advisory finding). Per-process names
-    # make the write-once idempotence race-free; stale dirs from dead
-    # pids are rmtree'd by _clear_stale_location on name reuse and live
-    # under the gitignored warehouse.
+    # EXTERNAL tables whose files live in the per-process sink scratch:
+    # removed at exit, reaped after a crash, never left in the warehouse.
+    # The default catalog is in-memory, so it is per process too and the
+    # names cannot collide across processes.
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_").replace("-", "_")
-    tag = f"{tag}_p{os.getpid()}"
     ob, lb = f"orders_bucketed_{tag}", f"lineitem_bucketed_{tag}"
-
-    def _clear_stale_location(table: str) -> None:
-        # the default catalog is in-memory: a previous process may have
-        # left the managed table's files in spark-warehouse while this
-        # session's catalog has no entry — saveAsTable then refuses with
-        # LOCATION_ALREADY_EXISTS even in overwrite mode
-        import shutil
-        from urllib.parse import urlparse
-
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        shutil.rmtree(f"{wh}/{table}", ignore_errors=True)
-
     # write-once per session: rebucketing 60k rows is cheap, but skip it
-    # when the managed tables already exist in this catalog
-    if not spark.catalog.tableExists(ob):
-        _clear_stale_location(ob)
-        (
-            io.load(spark, sf_dir, "orders")
-            .write.mode("overwrite")
-            .bucketBy(8, "o_orderkey")
-            .sortBy("o_orderkey")
-            .saveAsTable(ob)
-        )
-    if not spark.catalog.tableExists(lb):
-        _clear_stale_location(lb)
-        (
-            io.load(spark, sf_dir, "lineitem")
-            .write.mode("overwrite")
-            .bucketBy(8, "l_orderkey")
-            .sortBy("l_orderkey")
-            .saveAsTable(lb)
-        )
+    # when the tables already exist in this catalog
+    for name, source, key in (
+        (ob, "orders", "o_orderkey"),
+        (lb, "lineitem", "l_orderkey"),
+    ):
+        if not spark.catalog.tableExists(name):
+            (
+                io.load(spark, sf_dir, source)
+                .write.mode("overwrite")
+                .option("path", _sink_path(sf_dir, f"{source}_bucketed"))
+                .bucketBy(8, key)
+                .sortBy(key)
+                .saveAsTable(name)
+            )
     return (
         spark.table(ob)
         .hint("merge")

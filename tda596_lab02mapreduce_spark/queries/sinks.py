@@ -129,7 +129,10 @@ def sink_text_kv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = _sink_path(sf_dir, "wc_text_kv")
     save_text_kv(wc, path)
-    lines = sources.read_text_lines(spark, path + "/part-*")
+    # the directory, not a part-* glob: Spark's listing skips _SUCCESS
+    # and dot-files, and a glob makes it probe part-*/_spark_metadata
+    # (a FileStreamSink WARN with a stack trace on every call)
+    lines = sources.read_text_lines(spark, path)
     parsed = lines.select(
         F.regexp_extract("line", r"^(\S+) (\S+)$", 1).alias("key"),
         F.regexp_extract("line", r"^(\S+) (\S+)$", 2).cast("long").alias("cnt"),

@@ -36,10 +36,10 @@ def read_whole_files(spark: SparkSession, path_glob: str) -> DataFrame:
     )
 
 
-def read_text_lines(spark: SparkSession, path_glob: str) -> DataFrame:
+def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
     """(filename, line) at line granularity — splittable, the 100 TB
-    default for text."""
-    return spark.read.text(path_glob).select(
+    default for text. ``path`` is a file, a directory or a glob."""
+    return spark.read.text(path).select(
         F.input_file_name().alias("filename"), F.col("value").alias("line")
     )
 

@@ -87,10 +87,10 @@ def table_stream(
     max_files: int | None = None,
 ) -> DataFrame:
     """Any fixture table as a file stream. FileStreamSource needs an
-    explicit schema: it is read from the footer via a one-file batch
-    scan, so the stream sees exactly what the batch path sees (the
-    events ts physical type has drifted across fixture generations)
-    and batch-vs-stream invariance holds by construction. Symlink
+    explicit schema: it is the batch table's (``io.table``), so the
+    stream sees exactly what the batch path sees (the events ts
+    physical type has drifted across fixture generations) and
+    batch-vs-stream invariance holds by construction. Symlink
     directory staging. No ts coercion — events callers use
     events_stream.
 
@@ -107,7 +107,7 @@ def table_stream(
     model-swap serve drains copies=2 / max_files=1 → exactly 2
     micro-batches of the full table) — unlike the env knob, which is
     a probe-only override."""
-    schema = spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
+    schema = io.table(spark, sf_dir, table).schema
     reader = spark.readStream.schema(schema).format("parquet")
     mft = (
         max_files

@@ -141,6 +141,33 @@ def test_bucketed_join_needs_no_shuffle(spark, bucketed_tables):
     assert joined.count() > 0
 
 
+def test_bucketed_revenue_tables_live_in_sink_scratch(spark, sf_smoke):
+    """join_bucketed_revenue saves its two bucketed tables as EXTERNAL
+    tables under the per-process sink scratch (removed at exit), so no
+    managed-table dir is left behind in the warehouse."""
+    from urllib.parse import urlparse
+
+    from tda596_lab02mapreduce_spark.queries import sinks
+    from tda596_lab02mapreduce_spark.registry import get
+
+    names = ("orders_bucketed_sf0_001", "lineitem_bucketed_sf0_001")
+    for name in names:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+
+    def listing() -> list[str]:
+        return sorted(os.listdir(warehouse)) if os.path.isdir(warehouse) else []
+
+    before = listing()
+    assert get("join_bucketed_revenue").spark_fn(spark, sf_smoke).count() > 0
+    for name in names:
+        assert spark.catalog.getTable(name).tableType == "EXTERNAL"
+        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
+        location = next(r.data_type for r in rows if r.col_name == "Location")
+        assert urlparse(location).path.startswith(sinks._SCRATCH + os.sep), location
+    assert listing() == before
+
+
 def test_compact_parquet_merges_small_files(spark, sf_smoke, tmp_path):
     import glob
 
