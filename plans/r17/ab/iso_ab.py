@@ -67,7 +67,7 @@ def pagerank_q(ex_ckpt: bool):
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= 2)
     )
-    return pagerank(pairs, "id_a", "id_b", id_out="doc_id", rank_out="rank")
+    return pagerank(pairs, "id_a", "id_b", id_out="doc_id")
 
 
 def lpa_q(use_distinct: bool):

@@ -24,7 +24,7 @@ def q():
         (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
         .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_shared")).filter(F.col("n_shared") >= 2))
-    return pagerank(pairs, "id_a", "id_b", id_out="doc_id", rank_out="rank")
+    return pagerank(pairs, "id_a", "id_b", id_out="doc_id")
 
 q().write.mode("overwrite").format("noop").save()
 best = float("inf")

@@ -52,6 +52,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 _PID = "__rank_pid"
+_BKT = "__rank_bkt"
 _LRANK = "__rank_local"
 
 
@@ -153,35 +154,40 @@ def grouped_rank_cumsum(
     MONOTONE bucketing of the order key (every row of bucket b sorts
     before every row of bucket b+1 within its group: an integer value
     div a width, the leading byte of the hash the order sorts on, …),
-    pass it and the helper skips BOTH the range-boundary sampling job
-    and the localCheckpoint pin (sampled boundaries are what make the
-    two plan branches nondeterministic; an expression is deterministic
-    by construction).  One hash exchange on (group, bucket), keyed
-    local windows, per-(group, bucket) offsets.  Balance is the
+    pass it and the helper skips the range-boundary sampling job
+    (sampled boundaries are what make the two plan branches
+    nondeterministic; an expression is deterministic by construction).
+    One hash exchange on (group, bucket), keyed local windows,
+    per-(group, bucket) offsets.  Balance is the
     caller's contract — uniform hashes bucket perfectly, value widths
     track the data distribution."""
     spark = df.sparkSession
     n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     gcols = list(group_cols)
     order_exprs = list(order_exprs)
-    if bucket_expr is not None:
-        return _bucketed_rank_cumsum(
-            df, gcols, order_exprs, sum_cols, bucket_expr, rank_col, n
+    # The slice key: a range partition id, or the caller's bucket.
+    if bucket_expr is None:
+        key, bkey = _PID, "__bpid"
+        part = df.repartitionByRange(n, *gcols, *order_exprs).withColumn(
+            _PID, F.spark_partition_id()
         )
-    part = (
-        df.repartitionByRange(n, *gcols, *order_exprs)
-        .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
-    w = Window.partitionBy(_PID, *gcols).orderBy(*order_exprs)
+    else:
+        key, bkey = _BKT, "__bbkt"
+        part = df.withColumn(_BKT, bucket_expr).repartition(n, *gcols, _BKT)
+    # With sampled boundaries the pin keeps both branches on one
+    # sample; with a bucket (deterministic by construction) it stops
+    # the local/totals/offsets branches from re-running the caller's
+    # upstream lineage (scan + aggregate) once per branch.
+    part = part.localCheckpoint(eager=False)
+    w = Window.partitionBy(key, *gcols).orderBy(*order_exprs)
     wcum = w.rowsBetween(Window.unboundedPreceding, 0)
     local = part.withColumn(_LRANK, F.row_number().over(w))
     for name, col in sum_cols:
         local = local.withColumn(f"__lcum_{name}", F.sum(col).over(wcum))
 
-    totals = local.groupBy(_PID, *gcols).agg(
+    totals = local.groupBy(key, *gcols).agg(
         F.max(_LRANK).alias("__pcnt"),
-        # the partition total is the prefix sum AT THE LAST ROW, not the
+        # the slice total is the prefix sum AT THE LAST ROW, not the
         # max prefix — they only coincide for nonnegative summands, and
         # signed summands (sweep-line ±1 deltas) broke the max form
         *[
@@ -190,20 +196,20 @@ def grouped_rank_cumsum(
         ],
     )
     prior = totals.select(
-        F.col(_PID).alias("__bpid"),
+        F.col(key).alias(bkey),
         *[F.col(g).alias(f"__bg_{g}") for g in gcols],
         F.col("__pcnt").alias("__bcnt"),
         *[F.col(f"__ptot_{name}").alias(f"__btot_{name}") for name, _ in sum_cols],
     )
     # Triangular join over the ≤ n × |groups| summary rows: offset of
-    # (group, p) = sum of the SAME group's totals with pid < p.  Tiny ×
-    # tiny — broadcast nested loop (equi-part on group + range on pid).
-    cond = F.col("__bpid") < F.col(_PID)
+    # (group, slice) = sum of the SAME group's totals in earlier slices.
+    # Tiny × tiny — broadcast nested loop (equi-part on group + range on key).
+    cond = F.col(bkey) < F.col(key)
     for g in gcols:
         cond = cond & (F.col(f"__bg_{g}") == F.col(g))
     offs = (
         totals.join(F.broadcast(prior), cond, "left")
-        .groupBy(_PID, *gcols)
+        .groupBy(key, *gcols)
         .agg(
             F.coalesce(F.sum("__bcnt"), F.lit(0)).alias("__off_cnt"),
             *[
@@ -212,9 +218,9 @@ def grouped_rank_cumsum(
             ],
         )
     )
-    out = local.join(F.broadcast(offs), [_PID, *gcols])
+    out = local.join(F.broadcast(offs), [key, *gcols])
     out = out.withColumn(rank_col, (F.col("__off_cnt") + F.col(_LRANK)).cast("bigint"))
-    drop = [_PID, _LRANK, "__off_cnt"]
+    drop = [key, _LRANK, "__off_cnt"]
     for name, _ in sum_cols:
         out = out.withColumn(name, F.col(f"__off_{name}") + F.col(f"__lcum_{name}"))
         drop += [f"__lcum_{name}", f"__off_{name}"]
@@ -227,16 +233,13 @@ def global_ntile(
     k: int,
     *,
     bucket_col: str = "bucket_id",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Exact global ``ntile(k)`` from the distributed rank: with N rows
     the first N % k buckets get ceil(N/k) rows — the identical
     semantics Spark's and DuckDB's ntile use, reproduced from (rank,
     N) with row-local arithmetic.  N arrives as a broadcast 1-row
     aggregate of the ranked output, never a global window."""
-    ranked = global_rank_cumsum(
-        df, order_exprs, rank_col="__ntile_rank", num_partitions=num_partitions
-    )
+    ranked = global_rank_cumsum(df, order_exprs, rank_col="__ntile_rank")
     tot = ranked.agg(F.max("__ntile_rank").alias("__ntile_n"))
     return (
         ranked.crossJoin(F.broadcast(tot))
@@ -259,69 +262,3 @@ def ntile_from_rank(r: Column, n: Column, k: int) -> Column:
         rem + F.ceil((r - big_span) / F.when(q > 0, q))
     )
     return bucket.cast("bigint")
-
-
-def _bucketed_rank_cumsum(
-    df: DataFrame,
-    gcols: list[str],
-    order_exprs: list,
-    sum_cols: Sequence[tuple[str, "Column | str"]],
-    bucket_expr: "Column",
-    rank_col: str,
-    n: int,
-) -> DataFrame:
-    """Deterministic-bucket variant of grouped_rank_cumsum: the caller
-    supplies a monotone bucket of the order key, so both plan branches
-    agree without sampling or a checkpoint pin."""
-    BKT = "__rank_bkt"
-    # the pin here is NOT for determinism (the bucket expression is
-    # deterministic, unlike sampled range boundaries) — it stops the
-    # local/totals/offsets branches from re-running the caller's
-    # upstream lineage (scan + aggregate) once per branch
-    part = (
-        df.withColumn(BKT, bucket_expr)
-        .repartition(n, *gcols, BKT)
-        .localCheckpoint(eager=False)
-    )
-    w = Window.partitionBy(BKT, *gcols).orderBy(*order_exprs)
-    wcum = w.rowsBetween(Window.unboundedPreceding, 0)
-    local = part.withColumn(_LRANK, F.row_number().over(w))
-    for name, col in sum_cols:
-        local = local.withColumn(f"__lcum_{name}", F.sum(col).over(wcum))
-
-    totals = local.groupBy(BKT, *gcols).agg(
-        F.max(_LRANK).alias("__pcnt"),
-        # last-row prefix (max_by rank), NOT max prefix — see the
-        # signed-summand note in grouped_rank_cumsum
-        *[
-            F.max_by(f"__lcum_{name}", F.col(_LRANK)).alias(f"__ptot_{name}")
-            for name, _ in sum_cols
-        ],
-    )
-    prior = totals.select(
-        F.col(BKT).alias("__bbkt"),
-        *[F.col(g).alias(f"__bg_{g}") for g in gcols],
-        F.col("__pcnt").alias("__bcnt"),
-        *[F.col(f"__ptot_{name}").alias(f"__btot_{name}") for name, _ in sum_cols],
-    )
-    cond = F.col("__bbkt") < F.col(BKT)
-    for g in gcols:
-        cond = cond & (F.col(f"__bg_{g}") == F.col(g))
-    offs = (
-        totals.join(F.broadcast(prior), cond, "left")
-        .groupBy(BKT, *gcols)
-        .agg(
-            F.coalesce(F.sum("__bcnt"), F.lit(0)).alias("__off_cnt"),
-            *[
-                F.coalesce(F.sum(f"__btot_{name}"), F.lit(0)).alias(f"__off_{name}")
-                for name, _ in sum_cols
-            ],
-        )
-    )
-    out = local.join(F.broadcast(offs), [BKT, *gcols])
-    out = out.withColumn(rank_col, (F.col("__off_cnt") + F.col(_LRANK)).cast("bigint"))
-    drop = [BKT, _LRANK, "__off_cnt"]
-    for name, _ in sum_cols:
-        out = out.withColumn(name, F.col(f"__off_{name}") + F.col(f"__lcum_{name}"))
-        drop += [f"__lcum_{name}", f"__off_{name}"]
-    return out.drop(*drop)

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+EMBEDDING_DIM = 64  # width of the embeddings fixture's `embedding` column
+
 
 def _as_double(v: Column) -> Column:
     return v.cast("array<double>")

@@ -66,7 +66,8 @@ from tda596_lab02mapreduce_spark.functions.rank import small_df_rank
 ALS_S = 1000  # factor scale: integer milli-units
 ALS_LAMBDA_Q = 100_000  # ridge 0.1 in S² units (on mean-normalized A)
 ALS_CLAMP = 8 * ALS_S  # |factor| ≤ 8.0 real
-ALS_ROUNDS = 2
+ALS_ROUNDS = 2  # the registered ALS queries and their replays all train this many
+ALS_TOPK = 3  # brands per customer in als_recommend_topk and its replay
 
 
 def _tdiv(num: str, den: str, div: str) -> str:
@@ -222,14 +223,12 @@ def _train(
     return ratings, x, y
 
 
-def als_rank2_factors(
-    spark: SparkSession, sf_dir: str, *, rounds: int = ALS_ROUNDS
-) -> DataFrame:
-    """Run ``rounds`` full ALS rounds; return the final 25-row item
+def als_rank2_factors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Run ``ALS_ROUNDS`` full ALS rounds; return the final 25-row item
     factor table (brand, y1_q, y2_q, n_ratings).  Hash-checking these
     25 rows proves the ENTIRE trajectory: every user factor feeds the
     item solve that produced them."""
-    _, _, y = _train(spark, sf_dir, rounds)
+    _, _, y = _train(spark, sf_dir, ALS_ROUNDS)
     return y.select(
         F.col("i").alias("brand"),
         F.col("y1").alias("y1_q"),
@@ -238,12 +237,10 @@ def als_rank2_factors(
     )
 
 
-def als_user_factors(
-    spark: SparkSession, sf_dir: str, *, rounds: int = ALS_ROUNDS
-) -> DataFrame:
-    """User factors after ``rounds`` rounds (test/eval helper; the
+def als_user_factors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """User factors after ``ALS_ROUNDS`` rounds (test/eval helper; the
     registered query returns the item side)."""
-    _, x, _ = _train(spark, sf_dir, rounds)
+    _, x, _ = _train(spark, sf_dir, ALS_ROUNDS)
     return x
 
 
@@ -328,31 +325,25 @@ y{k} AS (
     return parts
 
 
-def als_oracle_sql(*, rounds: int = ALS_ROUNDS) -> str:
+def als_oracle_sql() -> str:
     """The unrolled DuckDB replay of the full trajectory: identical
     ratings, identical init, identical integer Cramer solves per
     half-round, final item factors."""
-    parts = _trajectory_parts(rounds, _RATINGS_SQL)
+    parts = _trajectory_parts(ALS_ROUNDS, _RATINGS_SQL)
     return (
         "WITH "
         + ",\n".join(parts)
         + f"""
 SELECT i AS brand, y1 AS y1_q, y2 AS y2_q, n AS n_ratings
-FROM y{rounds}
+FROM y{ALS_ROUNDS}
 """
     )
 
 
-def als_recommend_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    rounds: int = ALS_ROUNDS,
-    k: int = 3,
-) -> DataFrame:
+def als_recommend_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SERVE half of the factorization (the fit/serve symmetry
     discipline: kmeans fit→assign, PCA fit→project, BPE train→encode,
-    ALS factors→recommend): per customer the top-k brands by predicted
+    ALS factors→recommend): per customer the top-ALS_TOPK brands by predicted
     affinity x·y, EXCLUDING brands the customer already purchased —
     the model-based recommendation list the memory-based
     recsys_item_cosine_topk cannot produce (it has no user
@@ -369,7 +360,7 @@ def als_recommend_topk(
     no driver action."""
     from pyspark.sql.window import Window
 
-    ratings, x, y = _train(spark, sf_dir, rounds)
+    ratings, x, y = _train(spark, sf_dir, ALS_ROUNDS)
     cand = (
         x.select("u", "x1", "x2")
         .crossJoin(F.broadcast(y.select("i", "y1", "y2")))
@@ -386,7 +377,7 @@ def als_recommend_topk(
     )
     return (
         cand.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
+        .filter(F.col("rnk") <= ALS_TOPK)
         .select(
             F.col("u").alias("cust_id"),
             F.col("i").alias("brand"),
@@ -396,10 +387,10 @@ def als_recommend_topk(
     )
 
 
-def als_recommend_oracle_sql(*, rounds: int = ALS_ROUNDS, k: int = 3) -> str:
+def als_recommend_oracle_sql() -> str:
     """DuckDB replay: the same unrolled trajectory, then the same
     scored anti-joined ranked top-k."""
-    base = als_oracle_sql(rounds=rounds)
+    base = als_oracle_sql()
     # reuse the trajectory CTEs; swap the final SELECT for the serve
     head = base[: base.rindex("SELECT i AS brand")].rstrip()
     return (
@@ -408,7 +399,7 @@ def als_recommend_oracle_sql(*, rounds: int = ALS_ROUNDS, k: int = 3) -> str:
 scored AS (
   SELECT x.u, y.i,
          CAST(x.x1 * y.y1 + x.x2 * y.y2 AS BIGINT) AS score_q
-  FROM x{rounds} x CROSS JOIN y{rounds} y
+  FROM x{ALS_ROUNDS} x CROSS JOIN y{ALS_ROUNDS} y
   WHERE NOT EXISTS (SELECT 1 FROM r
                     WHERE r.u = x.u AND r.i = y.i)
 )
@@ -418,7 +409,7 @@ FROM (
       PARTITION BY u ORDER BY score_q DESC, i) AS rnk
   FROM scored
 )
-WHERE rnk <= {k}
+WHERE rnk <= {ALS_TOPK}
 """
     )
 
@@ -452,9 +443,7 @@ def _resid_mu(div: str, x1: str = "x1", y1: str = "y1") -> str:
     return _tdiv(num, str(ALS_S), div)
 
 
-def als_heldout_eval(
-    spark: SparkSession, sf_dir: str, *, rounds: int = ALS_ROUNDS
-) -> DataFrame:
+def als_heldout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fit the rank-2 ALS on the md5 TRAIN fold only (fold ≠ 0 of
     ALS_EVAL_FOLDS on the (u, i) key — deterministic, engine-portable,
     the conformal fold discipline) and report exact integer held-out
@@ -488,7 +477,7 @@ def als_heldout_eval(
         .repartition(F.col("u"))
     )
     test = full.filter(F.col("fold") == 0).select("u", "i", "r")
-    x, y = _train_loop(train, rounds)
+    x, y = _train_loop(train, ALS_ROUNDS)
 
     resid_tr = _resid_mu("div")
     tr = (
@@ -532,7 +521,7 @@ def als_heldout_eval(
     )
 
 
-def als_heldout_oracle_sql(*, rounds: int = ALS_ROUNDS) -> str:
+def als_heldout_oracle_sql() -> str:
     """DuckDB replay: identical md5 split, identical trajectory on the
     train fold (the shared _trajectory_parts), identical integer
     residual sums on both folds."""
@@ -540,7 +529,7 @@ def als_heldout_oracle_sql(*, rounds: int = ALS_ROUNDS) -> str:
   SELECT u, i, r FROM (
     SELECT u, i, r, {_FOLD_DUCK} AS fold FROM ({_RATINGS_SQL})
   ) WHERE fold <> 0"""
-    parts = _trajectory_parts(rounds, ratings_train)
+    parts = _trajectory_parts(ALS_ROUNDS, ratings_train)
     resid_tr = _resid_mu("//")
     resid_te = _resid_mu("//", "cx1", "cy1")
     return (
@@ -556,8 +545,8 @@ tr_err AS (
   SELECT CAST(count(*) AS BIGINT) AS n_train,
          CAST(SUM(({resid_tr}) * ({resid_tr})) AS BIGINT) AS sse_train_mq
   FROM r
-  JOIN y{rounds} USING (i)
-  JOIN x{rounds} USING (u)
+  JOIN y{ALS_ROUNDS} USING (i)
+  JOIN x{ALS_ROUNDS} USING (u)
 ),
 te_j AS (
   SELECT te.r,
@@ -565,8 +554,8 @@ te_j AS (
          COALESCE(x.x1, 0) AS cx1, COALESCE(x.x2, 0) AS cx2,
          COALESCE(y.y1, 0) AS cy1, COALESCE(y.y2, 0) AS cy2
   FROM te
-  LEFT JOIN y{rounds} y USING (i)
-  LEFT JOIN x{rounds} x USING (u)
+  LEFT JOIN y{ALS_ROUNDS} y USING (i)
+  LEFT JOIN x{ALS_ROUNDS} x USING (u)
 ),
 te_err AS (
   SELECT CAST(count(*) AS BIGINT) AS n_test,

@@ -33,7 +33,6 @@ def asof_join(
     *,
     tolerance: Column | None = None,
     how: str = "inner",
-    right_order: Sequence[str] = (),
     direction: str = "backward",
 ) -> DataFrame:
     """For each ``left`` row, attach the payload of the latest
@@ -45,9 +44,10 @@ def asof_join(
     drops matches further than ``left.ts + tolerance`` in the future.
 
     right_payload columns appear on the output prefixed ``asof_``.
-    ``right_order`` breaks ties among right rows at the same ts
-    (pass a unique column for determinism). ``how`` is "inner"
-    (drop unmatched) or "left" (keep with null payload).
+    Right rows that share a key and a ts tie: which one matches is not
+    specified, so callers keep (key, right ts) unique or pick a payload
+    that agrees across ties. ``how`` is "inner" (drop unmatched) or
+    "left" (keep with null payload).
     ``tolerance``: optional max age (Column interval or duration
     expression) — matches older than ``left.ts - tolerance`` drop.
     """
@@ -64,24 +64,18 @@ def asof_join(
         *[F.col(c).alias(c) for c in right_payload],
     )
     # Right rows sort before left rows at equal ts (__prio 0 < 1) so an
-    # exactly-simultaneous right row is a valid match. Extra right_order
-    # columns make the "latest" pick deterministic under ts ties.
+    # exactly-simultaneous right row is a valid match.
     r = right.select(
         *[F.col(c) for c in on],
         F.col(right_ts).cast("timestamp").alias("__event_ts"),
         F.lit(0).alias("__prio"),
         payload.alias("__payload"),
-        *[F.col(c).alias(f"__ord_{i}") for i, c in enumerate(right_order)],
     )
     l = left.select(  # noqa: E741
         "*",
         F.col(left_ts).cast("timestamp").alias("__event_ts"),
         F.lit(1).alias("__prio"),
         F.lit(None).cast(r.schema["__payload"].dataType).alias("__payload"),
-        *[
-            F.lit(None).cast(r.schema[f"__ord_{i}"].dataType).alias(f"__ord_{i}")
-            for i in range(len(right_order))
-        ],
     )
     left_cols = [c for c in left.columns]
     unioned = l.unionByName(r, allowMissingColumns=True)
@@ -89,8 +83,7 @@ def asof_join(
     # Backward walks ascending ts; forward walks DESCENDING ts so the
     # carried payload is the nearest FUTURE right row. Right rows still
     # sort before left at equal ts (prio 0 first) — a simultaneous
-    # right row matches in either direction. right_order ties flip with
-    # the walk so "earliest future" keeps the same deterministic pick.
+    # right row matches in either direction.
     if direction == "nearest":
         # ONE ascending window pass computes BOTH sides (same single
         # shuffle as backward/forward): the backward candidate is the
@@ -101,9 +94,7 @@ def asof_join(
         # right row sorts before the left row, so it is the backward
         # candidate with gap 0 and wins outright.
         w_asc = Window.partitionBy(*on).orderBy(
-            F.col("__event_ts").asc(),
-            F.col("__prio").asc(),
-            *[F.col(f"__ord_{i}").asc_nulls_first() for i in range(len(right_order))],
+            F.col("__event_ts").asc(), F.col("__prio").asc()
         )
         matched = unioned.withColumn(
             "__mb",
@@ -152,17 +143,9 @@ def asof_join(
         if direction == "backward"
         else F.col("__event_ts").desc()
     )
-    ord_cols = [
-        (
-            F.col(f"__ord_{i}").asc_nulls_first()
-            if direction == "backward"
-            else F.col(f"__ord_{i}").desc_nulls_first()
-        )
-        for i in range(len(right_order))
-    ]
     w = (
         Window.partitionBy(*on)
-        .orderBy(ts_ord, F.col("__prio").asc(), *ord_cols)
+        .orderBy(ts_ord, F.col("__prio").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     matched = unioned.withColumn("__match", F.last("__payload", ignorenulls=True).over(w))

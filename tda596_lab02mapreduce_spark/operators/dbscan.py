@@ -51,13 +51,13 @@ EPS_Q = 20971  # floor(0.02 * 2^20) — frozen; eps = 0.02 in vector units
 MINPTS = 5
 
 
-def _points(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+def _points(emb: DataFrame) -> DataFrame:
     return emb.select(
-        F.col(id_col).alias("pid"),
-        F.floor(F.col(vec_col).getItem(0).cast("double") * Q_SCALE)
+        F.col("vec_id").alias("pid"),
+        F.floor(F.col("embedding").getItem(0).cast("double") * Q_SCALE)
         .cast("long")
         .alias("xq"),
-        F.floor(F.col(vec_col).getItem(1).cast("double") * Q_SCALE)
+        F.floor(F.col("embedding").getItem(1).cast("double") * Q_SCALE)
         .cast("long")
         .alias("yq"),
     )
@@ -109,14 +109,12 @@ def eps_neighbor_pairs(pts: DataFrame) -> DataFrame:
     )
 
 
-def dbscan_roles(
-    emb: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def dbscan_roles(emb: DataFrame) -> DataFrame:
     """Full DBSCAN labelling: one row per point with
     (pid, role in {core, border, noise}, cluster_id; noise = -1).
     Cluster id = the minimum core-point id of the density-connected
     component (total order — deterministic in both engines)."""
-    pts = _points(emb, id_col, vec_col)
+    pts = _points(emb)
     pairs = eps_neighbor_pairs(pts).localCheckpoint(eager=False)
     core = (
         pairs.groupBy("a_id")
@@ -154,7 +152,7 @@ def dbscan_roles(
         .select("pid", F.lit("noise").alias("role"),
                 F.lit(-1).cast("bigint").alias("cluster_id"))
     )
-    return labelled.unionByName(noise_rows).withColumnRenamed("pid", id_col)
+    return labelled.unionByName(noise_rows).withColumnRenamed("pid", "vec_id")
 
 
 DBSCAN_ORACLE = f"""

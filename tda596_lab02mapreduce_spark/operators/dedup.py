@@ -44,6 +44,14 @@ MINHASH_B = (
     939989466, 1322209147, 36593445, 2128305279, 1058056026, 702721062,
     141520145, 1865406985, 1601591641, 1264444580,
 )
+# MinHash-LSH shape (signature width, bands of MINHASH_PERM // MINHASH_BANDS
+# rows) over word SHINGLE_K-shingles; SimHash signatures are SIMHASH_BITS
+# wide, banded into SIMHASH_CHUNKS pieces
+MINHASH_PERM = 16
+MINHASH_BANDS = 4
+SHINGLE_K = 3
+SIMHASH_BITS = 64
+SIMHASH_CHUNKS = 4
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -62,30 +70,28 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def shingles(text: Column, k: int = 3) -> Column:
-    """Word k-shingles as strings (row-local). Short docs (< k tokens)
+def shingles(text: Column) -> Column:
+    """Word SHINGLE_K-shingles as strings (row-local). Short docs (< SHINGLE_K tokens)
     yield their whole token run as the single shingle. The zip_with
     construction (functions/text.py:ngram_shingles) keeps the tokenize
     subtree O(1)-per-row instead of re-evaluated per shingle."""
     toks = tokens_nonempty(text)
     n = F.size(toks)
-    return F.when(n < k, F.array(F.concat_ws(" ", toks))).otherwise(
-        ngram_shingles(toks, k)
+    return F.when(n < SHINGLE_K, F.array(F.concat_ws(" ", toks))).otherwise(
+        ngram_shingles(toks, SHINGLE_K)
     )
 
 
-def minhash_signature(
-    shingle_col: Column, num_perm: int, *, family: str = "xxh64"
-) -> Column:
-    """num_perm-wide MinHash signature as ONE fold over the shingle
+def minhash_signature(shingle_col: Column, *, family: str = "xxh64") -> Column:
+    """MINHASH_PERM-wide MinHash signature as ONE fold over the shingle
     array: the accumulator is the running element-wise min of the
-    num_perm hash family (seed = permutation index folded into
+    MINHASH_PERM hash family (seed = permutation index folded into
     xxhash64, or the A/B universal draws for family="md5lin").
     Row-local.
 
     Single-pass matters: the naive per-permutation form
     ``array(array_min(transform(shingles, h_i)) for i in ...)`` embeds
-    the shingle-construction subtree num_perm times, and Catalyst's
+    the shingle-construction subtree MINHASH_PERM times, and Catalyst's
     projection collapse multiplies that again at every consumer —
     measured 100×+ slowdown at sf0.1. Here the shingle subtree occurs
     exactly once.
@@ -93,8 +99,9 @@ def minhash_signature(
     family="md5lin" additionally evaluates the (cryptographic, slower)
     md5 exactly ONCE per shingle: the fold walks a pre-transformed
     base-hash array, and the per-permutation work is two integer ops —
-    the inner `h` is a lambda VARIABLE, so referencing it num_perm
+    the inner `h` is a lambda VARIABLE, so referencing it MINHASH_PERM
     times does not re-inline the md5 subtree."""
+    num_perm = MINHASH_PERM
     if family == "xxh64":
         init = F.array_repeat(F.lit((1 << 63) - 1).cast("long"), num_perm)
         return F.aggregate(
@@ -111,10 +118,8 @@ def minhash_signature(
         )
     if family != "md5lin":
         raise ValueError(f"unknown minhash family {family!r}")
-    if num_perm > len(MINHASH_A):
-        raise ValueError(f"md5lin family supports ≤{len(MINHASH_A)} perms")
-    a_lit = F.array(*[F.lit(a).cast("long") for a in MINHASH_A[:num_perm]])
-    b_lit = F.array(*[F.lit(b).cast("long") for b in MINHASH_B[:num_perm]])
+    a_lit = F.array(*[F.lit(a).cast("long") for a in MINHASH_A])
+    b_lit = F.array(*[F.lit(b).cast("long") for b in MINHASH_B])
     bases = F.transform(
         shingle_col,
         lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"),
@@ -138,7 +143,7 @@ def minhash_signature(
     )
 
 
-def _banded_entries(sig: Column, bands: int, rows_per_band: int, family: str) -> Column:
+def _banded_entries(sig: Column, family: str) -> Column:
     """array<struct<band, band_hash>> for one signature — the banding
     generator shared by the LSH pair builders. ONE expression (explode
     happens at the caller) so the signature subtree is evaluated once
@@ -149,6 +154,7 @@ def _banded_entries(sig: Column, bands: int, rows_per_band: int, family: str) ->
     slices ⟺ equal strings, so banding semantics are identical AND the
     key is replayable in the SQL oracle (array_to_string(slice, ','))
     with zero collision risk."""
+    rows_per_band = MINHASH_PERM // MINHASH_BANDS
     slice_str = lambda b: F.concat_ws(  # noqa: E731
         ",",
         F.transform(
@@ -158,7 +164,7 @@ def _banded_entries(sig: Column, bands: int, rows_per_band: int, family: str) ->
     )
     key = (lambda b: F.xxhash64(slice_str(b))) if family == "xxh64" else slice_str
     return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
+        F.sequence(F.lit(0), F.lit(MINHASH_BANDS - 1)),
         lambda b: F.struct(b.alias("band"), key(b).alias("band_hash")),
     )
 
@@ -168,47 +174,31 @@ def minhash_lsh_pairs(
     text_col: str,
     id_col: str,
     *,
-    num_perm: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
-    n_partitions: int | None = None,
     family: str = "xxh64",
 ) -> DataFrame:
     """Candidate near-duplicate pairs via MinHash + LSH banding.
 
-    signature (row-local) → explode into `bands` band-hashes →
+    signature (row-local) → explode into MINHASH_BANDS band-hashes →
     self-equi-join on (band, band_hash) with id_a < id_b → distinct
     pairs. Returns (id_a, id_b). A pair surfaces iff the docs collide
     in ≥1 band — the classic S-curve; guaranteed to contain all exact
     duplicates (tested property).
 
-    ``n_partitions``: optionally repartition before the (compute-bound)
-    signature projection. On a real cluster the scan already yields
-    enough splits; on few-split inputs this decouples CPU parallelism
-    from file layout.
-
     The banding generator is likewise a SINGLE expression (explode of
     transform over band indices) so the signature subtree — and the
     shingle subtree inside it — is evaluated once per row, not once
     per band."""
-    rows_per_band = num_perm // bands
     src = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__text"))
-    if n_partitions:
-        src = src.repartition(n_partitions, "__id")
-    sig = minhash_signature(
-        shingles(F.col("__text"), shingle_k), num_perm, family=family
-    )
+    sig = minhash_signature(shingles(F.col("__text")), family=family)
     banded = src.select(
-        "__id",
-        F.explode(_banded_entries(sig, bands, rows_per_band, family)).alias("bh"),
+        "__id", F.explode(_banded_entries(sig, family)).alias("bh")
     ).select("__id", "bh.band", "bh.band_hash")
     # Explicit repartition on the join key makes both self-join sides an
     # IDENTICAL exchange, so the signature projection runs ONCE and the
     # second side reads the same shuffle output (AQE stage reuse) —
     # without it the planner broadcasts one side and re-evaluates the
     # whole MinHash fold for it (measured 2.9s → 1.7s at sf0.1).
-    banded = banded.repartition(*(
-        [n_partitions] if n_partitions else []), "band", "band_hash")
+    banded = banded.repartition("band", "band_hash")
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -228,9 +218,6 @@ def minhash_near_dup_pairs(
     text_col: str,
     id_col: str,
     *,
-    num_perm: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
     threshold: float = 0.8,
     n_partitions: int | None = None,
     family: str = "xxh64",
@@ -248,25 +235,24 @@ def minhash_near_dup_pairs(
 
     Scale ledger vs the composable pipeline: one corpus scan instead
     of three, and one shuffle instead of three — at the price of the
-    band exchange carrying ``bands`` copies of each shingle set
+    band exchange carrying MINHASH_BANDS copies of each shingle set
     instead of ids only. Still strictly sub-quadratic: the join is an
     equi-join on (band, band_hash); identical-exchange both sides, so
     the shuffle is written once (AQE stage reuse). 3.5s → 1.3s at
     sf0.1. Returns (id_a, id_b, jaccard) with jaccard ≥ threshold."""
-    rows_per_band = num_perm // bands
     src = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__text"))
     if n_partitions:
         src = src.repartition(n_partitions, "__id")
     # MinHash over the distinct set ≡ MinHash over the multiset (min is
     # duplicate-blind), so one array serves signature AND verify.
     sets = src.select(
-        "__id", F.array_distinct(shingles(F.col("__text"), shingle_k)).alias("__set")
+        "__id", F.array_distinct(shingles(F.col("__text"))).alias("__set")
     )
-    sig = minhash_signature(F.col("__set"), num_perm, family=family)
+    sig = minhash_signature(F.col("__set"), family=family)
     banded = sets.select(
         "__id",
         "__set",
-        F.explode(_banded_entries(sig, bands, rows_per_band, family)).alias("bh"),
+        F.explode(_banded_entries(sig, family)).alias("bh"),
     ).select("__id", "__set", "bh.band", "bh.band_hash")
     banded = banded.repartition(
         *([n_partitions] if n_partitions else []), "band", "band_hash"
@@ -306,19 +292,15 @@ def jaccard_verify(
     text_col: str,
     id_col: str,
     *,
-    shingle_k: int = 3,
     threshold: float = 0.8,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Exact shingle-Jaccard for candidate pairs; keeps pairs ≥ threshold.
     Joins shingle sets back by id (two broadcast-or-shuffle hash joins
     on ids — O(candidates), not O(n²))."""
     src = df.select(F.col(id_col).alias("__id0"), F.col(text_col).alias("__text"))
-    if n_partitions:
-        src = src.repartition(n_partitions, "__id0")
     sets = src.select(
         F.col("__id0").alias("__id"),
-        F.array_distinct(shingles(F.col("__text"), shingle_k)).alias("__set"),
+        F.array_distinct(shingles(F.col("__text"))).alias("__set"),
     )
     j = (
         pairs.join(sets.withColumnRenamed("__id", "id_a").withColumnRenamed("__set", "set_a"), "id_a")
@@ -351,9 +333,9 @@ def _hex_vote_map() -> Column:
     return F.create_map(*items)
 
 
-def _token_votes(t: Column, bits: int, family: str = "xxh64") -> Column:
+def _token_votes(t: Column, family: str = "xxh64") -> Column:
     """±1 vote vector for one token. ONE hash call rendered to bit
-    votes, not `bits` shiftright probes of `bits` separate hash calls
+    votes, not 64 shiftright probes of 64 separate hash calls
     (expression-blowup trap, measured 10-100× at sf0.1 — see
     minhash_signature note).
 
@@ -362,8 +344,6 @@ def _token_votes(t: Column, bits: int, family: str = "xxh64") -> Column:
     4 votes per char through a literal lookup map. Replayable in the
     SQL oracle as bit probes of '0x'-parsed hex chars."""
     if family == "md5":
-        if bits != 64:
-            raise ValueError("md5 simhash family is 64-bit only")
         hexmap = _hex_vote_map()
         return F.flatten(
             F.transform(
@@ -374,21 +354,21 @@ def _token_votes(t: Column, bits: int, family: str = "xxh64") -> Column:
     if family != "xxh64":
         raise ValueError(f"unknown simhash family {family!r}")
     return F.transform(
-        F.split(F.lpad(F.bin(F.xxhash64(t)), bits, "0"), ""),
+        F.split(F.lpad(F.bin(F.xxhash64(t)), SIMHASH_BITS, "0"), ""),
         lambda c: F.when(c == "1", F.lit(1)).otherwise(F.lit(-1)).cast("long"),
     )
 
 
-def _pack_counters(counters: Column, bits: int) -> Column:
+def _pack_counters(counters: Column) -> Column:
     """Sign of each counter → packed long. Multiplies by a LITERAL
     weight array (zip_with references `counters` once), not 64 chained
     when(element_at(counters, b)...) each inlining the whole fold.
-    bin() is MSB-first, so weight[i] = bit (bits-1-i); index 0 is the
+    bin() is MSB-first, so weight[i] = bit (63-i); index 0 is the
     sign bit of the packed long."""
     weights = F.array(
         *[
-            F.lit(-(1 << (bits - 1)) if i == 0 else (1 << (bits - 1 - i))).cast("long")
-            for i in range(bits)
+            F.lit(-(1 << 63) if i == 0 else (1 << (63 - i))).cast("long")
+            for i in range(SIMHASH_BITS)
         ]
     )
     return F.aggregate(
@@ -402,24 +382,22 @@ def _pack_counters(counters: Column, bits: int) -> Column:
     )
 
 
-def _simhash_occurrence_fold(
-    text: Column, *, bits: int = 64, family: str = "xxh64"
-) -> Column:
+def _simhash_occurrence_fold(text: Column, *, family: str = "xxh64") -> Column:
     """Reference SimHash fold: one vote fold per token OCCURRENCE.
     Kept as the semantic baseline for the parity test of the
     run-length-optimized simhash() below."""
     toks = tokens_nonempty(text)
     counters = F.aggregate(
         toks,
-        F.array_repeat(F.lit(0).cast("long"), bits),
+        F.array_repeat(F.lit(0).cast("long"), SIMHASH_BITS),
         lambda acc, t: F.zip_with(
-            acc, _token_votes(t, bits, family), lambda a, v: a + v
+            acc, _token_votes(t, family), lambda a, v: a + v
         ),
     )
-    return _pack_counters(counters, bits)
+    return _pack_counters(counters)
 
 
-def simhash(text: Column, *, bits: int = 64, family: str = "xxh64") -> Column:
+def simhash(text: Column, *, family: str = "xxh64") -> Column:
     """64-bit SimHash of the token multiset — entirely row-local
     (one aggregate fold over the token array, no explode/shuffle).
 
@@ -436,7 +414,7 @@ def simhash(text: Column, *, bits: int = 64, family: str = "xxh64") -> Column:
     expansions per document, still O(n log n) row-local with no
     quadratic distinct×occurrence scan."""
     toks = F.array_sort(tokens_nonempty(text))
-    zeros = F.array_repeat(F.lit(0).cast("long"), bits)
+    zeros = F.array_repeat(F.lit(0).cast("long"), SIMHASH_BITS)
 
     def flush(st: Column) -> Column:
         # fold the finished run into the counters: counters += cnt × votes(prev)
@@ -444,7 +422,7 @@ def simhash(text: Column, *, bits: int = 64, family: str = "xxh64") -> Column:
         # re-inline the accumulated subtree, unlike a computed Column)
         return F.zip_with(
             st.getField("acc"),
-            _token_votes(st.getField("prev"), bits, family),
+            _token_votes(st.getField("prev"), family),
             lambda a, v: a + v * st.getField("cnt"),
         )
 
@@ -479,7 +457,7 @@ def simhash(text: Column, *, bits: int = 64, family: str = "xxh64") -> Column:
     # into the parquet scan's Filter, evaluating the signature twice
     # per side (measured 2.9s vs 1.5s at sf0.1). Non-nullable output
     # constant-folds the inferred IsNotNull away.
-    return F.coalesce(_pack_counters(counters, bits), F.lit(0).cast("long"))
+    return F.coalesce(_pack_counters(counters), F.lit(0).cast("long"))
 
 
 def simhash_pairs(
@@ -488,12 +466,11 @@ def simhash_pairs(
     id_col: str,
     *,
     max_hamming: int = 8,
-    chunks: int = 4,
     n_partitions: int | None = None,
     family: str = "xxh64",
 ) -> DataFrame:
     """Near-dup pairs by SimHash: band the 64-bit signature into
-    `chunks` 16-bit pieces (pigeonhole: hamming ≤ chunks-1 guarantees
+    SIMHASH_CHUNKS 16-bit pieces (pigeonhole: hamming ≤ chunks-1 guarantees
     one identical chunk; practical recall for ≤ max_hamming), join on
     identical chunks, verify with popcount of XOR.
 
@@ -506,7 +483,7 @@ def simhash_pairs(
     sh = src.select("__id", simhash(F.col("__text"), family=family).alias("__sh"))
     if n_partitions:
         sh = sh.repartition(n_partitions, "__id")
-    width = 64 // chunks
+    width = SIMHASH_BITS // SIMHASH_CHUNKS
     banded = sh.select(
         "__id",
         "__sh",
@@ -519,7 +496,7 @@ def simhash_pairs(
                         .bitwiseAND(F.lit((1 << width) - 1))
                         .alias("chunk_val"),
                     )
-                    for c in range(chunks)
+                    for c in range(SIMHASH_CHUNKS)
                 ]
             )
         ).alias("cv"),

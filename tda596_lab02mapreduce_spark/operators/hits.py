@@ -46,16 +46,11 @@ from tda596_lab02mapreduce_spark.operators.rounds import fixed_rounds
 __all__ = ["hits"]
 
 _UNIT = 1_000_000
+HITS_ROUNDS = 5  # hits_copurchase_bipartite's rounds, replayed by hits_oracle_sql
 
 
-def hits(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    *,
-    iters: int = 5,
-) -> DataFrame:
-    """Run ``iters`` HITS rounds on the directed edge list.
+def hits(edges: DataFrame, *, iters: int = HITS_ROUNDS) -> DataFrame:
+    """Run ``iters`` HITS rounds on the directed ``(src, dst)`` edge list.
 
     One round is: authority(d) = Σ_{s→d} hub(s), max-normalized to
     1e6; then hub(s) = Σ_{s→d} authority(d), max-normalized to 1e6.
@@ -72,7 +67,7 @@ def hits(
     # DECIMAL sums as the single largest cost (14.8 s → 11 s at
     # sf0.1 after this + the raw-frame checkpoint below).
     norm = f"CAST((CAST({_UNIT} AS DECIMAL(38,0)) * s) div m AS BIGINT)"
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
+    e = edges.select("src", "dst").distinct()
     # Materialize the deduped edge list ONCE: both join directions of
     # every round read it, and without the checkpoint each re-ran the
     # full upstream join + distinct (optimization r16, guide §1.2 —
@@ -130,9 +125,9 @@ def hits(
     )
 
 
-def hits_oracle_sql(edge_cte: str, iters: int = 5) -> str:
-    """Unrolled DuckDB replay of :func:`hits` (the pagerank oracle
-    discipline): ``edge_cte`` must define a relation ``e(src, dst)``
+def hits_oracle_sql(edge_cte: str) -> str:
+    """Unrolled DuckDB replay of ``HITS_ROUNDS`` :func:`hits` rounds (the
+    pagerank oracle discipline): ``edge_cte`` must define a relation ``e(src, dst)``
     (already distinct). Every round is the identical integer-sum +
     integer-division max-normalization, so the replay hashes
     bit-exactly against the Spark plan."""
@@ -147,7 +142,7 @@ def hits_oracle_sql(edge_cte: str, iters: int = 5) -> str:
         " CAST(1000000 AS HUGEINT) AS hu FROM e)",
     ]
     prev_h = "h0"
-    for i in range(1, iters + 1):
+    for i in range(1, HITS_ROUNDS + 1):
         parts.append(
             f"a{i}r AS MATERIALIZED (SELECT e.dst, SUM({prev_h}.hu) AS s "
             f"FROM e JOIN {prev_h} USING (src) GROUP BY e.dst)"
@@ -172,8 +167,8 @@ def hits_oracle_sql(edge_cte: str, iters: int = 5) -> str:
         + ",\n".join(parts)
         + f"""
 SELECT 'hub' AS node_type, src AS node_id, CAST(hu AS BIGINT) AS score_u
-FROM h{iters}
+FROM h{HITS_ROUNDS}
 UNION ALL
-SELECT 'auth', dst, CAST(au AS BIGINT) FROM a{iters}
+SELECT 'auth', dst, CAST(au AS BIGINT) FROM a{HITS_ROUNDS}
 """
     )

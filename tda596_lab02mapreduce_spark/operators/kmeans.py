@@ -37,8 +37,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tda596_lab02mapreduce_spark import sidecars
+from tda596_lab02mapreduce_spark.functions.vector import EMBEDDING_DIM
 
 _Q_SCALE = 1 << 20
+# embedding_kmeans_assign's model shape, shared by kmeans_fit's defaults
+# and the DuckDB replay (kmeans_oracle_sql)
+KMEANS_K = 8
+KMEANS_ROUNDS = 4
 
 
 def _trunc_div(s: int, n: int) -> int:
@@ -53,9 +58,9 @@ def _trunc_div(s: int, n: int) -> int:
     return q if s >= 0 else -q
 
 
-def _xq(vec_col: str) -> Column:
+def _xq() -> Column:
     return F.transform(
-        F.col(vec_col).cast("array<double>"),
+        F.col("embedding").cast("array<double>"),
         lambda x: F.floor(x * _Q_SCALE).cast("long"),
     )
 
@@ -75,27 +80,25 @@ def _dist2(xq_col: Column, centroid_q: list[int]) -> Column:
 def kmeans_fit(
     corpus: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = 64,
-    k: int = 8,
-    rounds: int = 4,
+    k: int = KMEANS_K,
+    rounds: int = KMEANS_ROUNDS,
     dataset_key: str | None = None,
     refit: bool = False,
 ) -> dict:
     """Fit (or fetch) fixed-``rounds`` Lloyd's k-means. Returns
     ``{"centroids_q": [k][dim ints], "k": k, "rounds": rounds}``.
-    Seeds are the ``k`` lowest-``id_col`` vectors (deterministic —
+    Seeds are the ``k`` lowest-``vec_id`` vectors (deterministic —
     the IVF seeding contract, but the ITERATION is distributed).
     Empty clusters keep their previous centroid (the standard Lloyd's
     convention that avoids collapse)."""
-    key = (dataset_key, vec_col, dim, k, rounds)
+    dim = EMBEDDING_DIM
+    key = (dataset_key, "embedding", dim, k, rounds)
     if dataset_key is not None and not refit:
         model = sidecars.load("kmeans", key)
         if model is not None:
             return model
 
-    q = corpus.select(F.col(id_col).alias("__id"), _xq(vec_col).alias("xq"))
+    q = corpus.select(F.col("vec_id").alias("__id"), _xq().alias("xq"))
     q = q.localCheckpoint(eager=False)
     seed_rows = q.orderBy("__id").limit(k).collect()  # k rows, a model seed
     cents = [[int(v) for v in r["xq"]] for r in seed_rows]
@@ -138,9 +141,6 @@ def kmeans_fit(
 def kmeans_assign(
     corpus: DataFrame,
     model: dict,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Assign every vector to its nearest model centroid: map-only
     (k fold-expression distances per row, argmin with first-index
@@ -148,12 +148,12 @@ def kmeans_assign(
     BIGINTs."""
     cents = model["centroids_q"]
     k = len(cents)
-    dists = [_dist2(_xq(vec_col), cents[j]).alias(f"d{j}") for j in range(k)]
+    dists = [_dist2(_xq(), cents[j]).alias(f"d{j}") for j in range(k)]
     darr = F.array(*[F.col(f"d{j}") for j in range(k)])
     return (
-        corpus.select(F.col(id_col), *dists)
+        corpus.select(F.col("vec_id"), *dists)
         .select(
-            id_col,
+            "vec_id",
             F.array_position(darr, F.least(*[F.col(f"d{j}") for j in range(k)]))
             .cast("bigint")
             .alias("cluster"),
@@ -162,52 +162,46 @@ def kmeans_assign(
     )
 
 
-def kmeans_oracle_sql(
-    sf_dir: str,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = 64,
-    k: int = 8,
-    rounds: int = 4,
-) -> str:
+def kmeans_oracle_sql(sf_dir: str) -> str:
     """DuckDB replay of the assignment against the committed sidecar:
     identical integer centroids as a literal table, identical BIGINT
     distance, identical (dist, cluster) argmin."""
     model = sidecars.committed(
-        "kmeans", (sf_dir, vec_col, dim, k, rounds), "embedding_kmeans_assign"
+        "kmeans",
+        (sf_dir, "embedding", EMBEDDING_DIM, KMEANS_K, KMEANS_ROUNDS),
+        "embedding_kmeans_assign",
     )
     crows = ",\n".join(
         f"({c + 1}, {i}, {int(model['centroids_q'][c][i])})"
         for c in range(len(model["centroids_q"]))
-        for i in range(dim)
+        for i in range(EMBEDDING_DIM)
     )
     return f"""
 WITH cent(c, i, cq) AS (VALUES
 {crows}
 ),
 elems AS (
-  SELECT {id_col}, u.i - 1 AS i,
+  SELECT vec_id, u.i - 1 AS i,
          CAST(FLOOR(u.x * {_Q_SCALE}) AS BIGINT) AS xq
   FROM (
-    SELECT {id_col}, unnest(CAST({vec_col} AS DOUBLE[])) AS x,
-           generate_subscripts({vec_col}, 1) AS i
+    SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) AS x,
+           generate_subscripts(embedding, 1) AS i
     FROM embeddings
   ) u
 ),
 d AS (
-  SELECT e.{id_col}, cent.c,
+  SELECT e.vec_id, cent.c,
          SUM((e.xq - cent.cq) * (e.xq - cent.cq)) AS dist2
   FROM elems e JOIN cent ON cent.i = e.i
   GROUP BY 1, 2
 ),
 best AS (
-  SELECT {id_col}, c, dist2,
-         row_number() OVER (PARTITION BY {id_col}
+  SELECT vec_id, c, dist2,
+         row_number() OVER (PARTITION BY vec_id
                             ORDER BY dist2, c) AS rn
   FROM d
 )
-SELECT {id_col}, CAST(c AS BIGINT) AS cluster,
+SELECT vec_id, CAST(c AS BIGINT) AS cluster,
        CAST(dist2 AS BIGINT) AS dist2_q
 FROM best WHERE rn = 1
 """

@@ -30,6 +30,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+N_FEATURES = 8  # floats per extract_features vector
+FRAME_EVERY_MS = 1000  # frame_sample's sampling interval
+AUDIO_FRAME = 256  # samples per audio_frame_energy frame
+
 MEDIA_META_SCHEMA = T.StructType(
     [
         T.StructField("media_type", T.StringType()),  # image|audio|video
@@ -133,10 +137,9 @@ def _real_resize(blob: bytes, target_w: int, target_h: int) -> bytes:
     return out.getvalue()
 
 
-def extract_features(
-    media: DataFrame, *, n_features: int = 8, decode: str = "fake"
-) -> DataFrame:
-    """mapInPandas feature extraction over binary media columns.
+def extract_features(media: DataFrame, *, decode: str = "fake") -> DataFrame:
+    """mapInPandas feature extraction over binary media columns: an
+    N_FEATURES-float vector per blob.
 
     Arrow-batched: each batch arrives as a pandas DataFrame whose
     ``blob`` column holds raw bytes. Map-only — no shuffle touches
@@ -151,13 +154,13 @@ def extract_features(
                     "real media decode requires Pillow/ffmpeg — not present "
                     "in this container; use decode='fake' or 'auto'"
                 )
-            return _real_decode_features(b, n_features)
+            return _real_decode_features(b, N_FEATURES)
         if decode == "auto" and _pillow() is not None:
             try:
-                return _real_decode_features(b, n_features)
+                return _real_decode_features(b, N_FEATURES)
             except Exception:
-                return _fake_decode(b, n_features)  # undecodable blob
-        return _fake_decode(b, n_features)
+                return _fake_decode(b, N_FEATURES)  # undecodable blob
+        return _fake_decode(b, N_FEATURES)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -230,10 +233,11 @@ def resize_images(
     return media.mapInPandas(run, schema=MEDIA_SCHEMA)
 
 
-def frame_sample(media: DataFrame, *, every_ms: int = 1000) -> DataFrame:
+def frame_sample(media: DataFrame) -> DataFrame:
     """Video frame-sampling plumbing: expands each video row into
-    (media_id, frame_ts_ms) rows from metadata alone — the binary
-    column is dropped BEFORE the explode so bytes never multiply."""
+    (media_id, frame_ts_ms) rows, one every FRAME_EVERY_MS, from
+    metadata alone — the binary column is dropped BEFORE the explode so
+    bytes never multiply."""
     return (
         media.filter(F.col("meta.media_type") == "video")
         .select(
@@ -242,7 +246,7 @@ def frame_sample(media: DataFrame, *, every_ms: int = 1000) -> DataFrame:
                 F.sequence(
                     F.lit(0).cast("long"),
                     F.coalesce(F.col("meta.duration_ms"), F.lit(0)),
-                    F.lit(every_ms).cast("long"),
+                    F.lit(FRAME_EVERY_MS).cast("long"),
                 )
             ).alias("frame_ts_ms"),
         )
@@ -259,11 +263,11 @@ AUDIO_FRAME_SCHEMA = T.StructType(
 )
 
 
-def audio_frame_energy(audio: DataFrame, *, frame: int = 256) -> DataFrame:
+def audio_frame_energy(audio: DataFrame) -> DataFrame:
     """mapInPandas audio framing: fake-decode each blob as raw 8-bit
     samples (the deterministic stand-in for a PCM decoder — swap in
     soundfile/ffmpeg at the SAME signature), window into fixed
-    ``frame``-sample frames, and emit per-frame sample count + exact
+    AUDIO_FRAME-sample frames, and emit per-frame sample count + exact
     integer energy (sum of squared sample values). Map-only — blobs
     never shuffle; output is O(len/frame) small rows per clip, which
     is what downstream VAD/segmentation joins consume at corpus scale.
@@ -274,10 +278,10 @@ def audio_frame_energy(audio: DataFrame, *, frame: int = 256) -> DataFrame:
             out = {"media_id": [], "frame_id": [], "n_samples": [], "energy": []}
             for mid, blob in zip(pdf["media_id"], pdf["blob"]):
                 b = bytes(blob) if blob is not None else b""
-                for f0 in range(0, len(b), frame):
-                    chunk = b[f0 : f0 + frame]
+                for f0 in range(0, len(b), AUDIO_FRAME):
+                    chunk = b[f0 : f0 + AUDIO_FRAME]
                     out["media_id"].append(mid)
-                    out["frame_id"].append(f0 // frame)
+                    out["frame_id"].append(f0 // AUDIO_FRAME)
                     out["n_samples"].append(len(chunk))
                     out["energy"].append(sum(x * x for x in chunk))
             yield pd.DataFrame(out)

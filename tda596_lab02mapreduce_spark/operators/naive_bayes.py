@@ -78,8 +78,6 @@ def _w_u(num: int, den: int) -> int:
 def naive_bayes_fit(
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    label_col: str = "lang",
     dataset_key: str | None = None,
     refit: bool = False,
     top_v: int = NB_TOP_V,
@@ -89,7 +87,7 @@ def naive_bayes_fit(
     {c: int}, "weights_u": {token: {c: int}}, "vocab": [...],
     "top_v": V}`` — all weights integer micro-units of the
     Laplace-smoothed log-probabilities over the capped vocabulary."""
-    key = (dataset_key, text_col, label_col, top_v)
+    key = (dataset_key, "text", "lang", top_v)
     if dataset_key is not None and not refit:
         model = sidecars.load("nb", key)
         if model is not None:
@@ -97,8 +95,8 @@ def naive_bayes_fit(
 
     spark = docs.sparkSession
     tok = docs.select(
-        F.col(label_col).alias("c"),
-        F.explode(F.split(F.col(text_col), " ")).alias("t"),
+        F.col("lang").alias("c"),
+        F.explode(F.split(F.col("text"), " ")).alias("t"),
     ).filter(F.length("t") > 0)
     # ONE token-stream pass (optimization r16, guide §1.2): the
     # class×token counts are aggregated first (map-side-combinable —
@@ -130,7 +128,7 @@ def naive_bayes_fit(
     # broadcast semi-join: ≤ V×C exact BIGINT rows reach the driver.
     counts = counts_ct.join(F.broadcast(vdf), "t", "left_semi").collect()
     doc_counts = (
-        docs.groupBy(F.col(label_col).alias("c"))
+        docs.groupBy(F.col("lang").alias("c"))
         .agg(F.count(F.lit(1)).alias("nd"))
         .collect()
     )
@@ -170,9 +168,6 @@ def naive_bayes_fit(
 def naive_bayes_confusion(
     docs: DataFrame,
     model: dict,
-    *,
-    text_col: str = "text",
-    label_col: str = "lang",
 ) -> DataFrame:
     """Classify every document and return the confusion matrix
     (true_lang, pred_lang, n_docs) — ≤ |classes|² rows, all exact.
@@ -189,10 +184,10 @@ def naive_bayes_confusion(
     join) is exactly the contract stream_nb_model_swap's
     batch-boundary oracle already hash-proves, and the registered
     batch oracle still scores via the join form."""
-    pred_col, n_iv = naive_bayes_score_columns(model, text_col=text_col)
+    pred_col, n_iv = naive_bayes_score_columns(model)
     return (
         docs.select(
-            F.col(label_col).alias("true_lang"),
+            F.col("lang").alias("true_lang"),
             pred_col.alias("pred_lang"),
             n_iv.alias("n_iv"),
         )
@@ -202,29 +197,22 @@ def naive_bayes_confusion(
     )
 
 
-def naive_bayes_oracle_sql(
-    sf_dir: str,
-    *,
-    text_col: str = "text",
-    label_col: str = "lang",
-    id_col: str = "doc_id",
-    top_v: int = NB_TOP_V,
-) -> str:
+def naive_bayes_oracle_sql(sf_dir: str) -> str:
     """DuckDB replay against the committed sidecar: identical literal
     integer weights, identical tokenize/join/sum, identical
     (score DESC, class ASC) argmax.  The vocabulary cap replays for
     free — out-of-vocabulary tokens drop at the inner join exactly as
     in the Spark serve."""
     model = sidecars.committed(
-        "nb", (sf_dir, text_col, label_col, top_v), "stream_nb_classify"
+        "nb", (sf_dir, "text", "lang", NB_TOP_V), "stream_nb_classify"
     )
     ctes, pred = _nb_scoring_ctes(model, "")
     return f"""
 WITH tok AS (
   -- empty tokens (double spaces) need no filter: they are never in
   -- the vocabulary, so the scoring inner join drops them
-  SELECT {id_col} AS doc_id, {label_col} AS true_lang,
-         unnest(string_split({text_col}, ' ')) AS t
+  SELECT doc_id AS doc_id, lang AS true_lang,
+         unnest(string_split(text, ' ')) AS t
   FROM documents
 ),
 {ctes}
@@ -234,7 +222,7 @@ GROUP BY 1, 2
 """
 
 
-def naive_bayes_score_columns(model: dict, *, text_col: str = "text"):
+def naive_bayes_score_columns(model: dict):
     """STATELESS per-row scoring of a fitted model — the form a
     STRUCTURED STREAM needs: because a document's tokens live in one
     row, the per-class score is a higher-order-function fold over the
@@ -255,7 +243,7 @@ def naive_bayes_score_columns(model: dict, *, text_col: str = "text"):
     NULL on miss) + coalesce implement the drop.  All integer BIGINT
     arithmetic; the model literals are the committed sidecar's."""
     toks = F.filter(
-        F.split(F.col(text_col), " "), lambda t: F.length(t) > 0
+        F.split(F.col("text"), " "), lambda t: F.length(t) > 0
     )
     vocab_map = F.create_map(
         *[x for t in model["vocab"] for x in (F.lit(t), F.lit(1))]

@@ -51,23 +51,27 @@ from tda596_lab02mapreduce_spark.operators.rounds import fixed_rounds
 
 __all__ = ["pagerank"]
 
+# damping d = 0.85 in hundredths, so the update is pure integer
+# arithmetic (d_pct/100); the SQL replay in queries/llm_pipeline.py
+# reads the same constant
+DAMPING_PCT = 85
+PAGERANK_ROUNDS = 10
+
 
 def pagerank(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     *,
-    iters: int = 10,
-    damping: float = 0.85,
+    iters: int = PAGERANK_ROUNDS,
     id_out: str = "id",
-    rank_out: str = "rank",
 ) -> DataFrame:
     """Rank nodes of an undirected edge list by power iteration.
 
-    Returns one row per node appearing in ``edges`` with its rank
-    after ``iters`` rounds (initial rank 1.0; ranks sum to ~|V|).
-    Singletons are absent by construction (their rank is the constant
-    ``1 - damping``); callers union them back for total coverage.
+    Returns ``(id_out, rank)``: one row per node appearing in ``edges``
+    with its rank after ``iters`` rounds (initial rank 1.0; ranks sum
+    to ~|V|). Singletons are absent by construction (their rank is the
+    constant ``1 - d``); callers union them back for total coverage.
     Every node present has degree >= 1, so there are no dangling-mass
     corrections to apply.
     """
@@ -90,12 +94,7 @@ def pagerank(
         .select("src", "dst", "dst_deg")
         .localCheckpoint(eager=False)
     )
-    # damping must be expressible in hundredths so the update is pure
-    # integer arithmetic (d_pct/100); 0.85 -> 85
-    d_pct = round(damping * 100)
-    if abs(d_pct / 100.0 - damping) > 1e-12:
-        raise ValueError(f"damping must be a multiple of 0.01, got {damping}")
-    base_u = (100 - d_pct) * 10_000  # (1-d) in 1e-6 micro-units
+    base_u = (100 - DAMPING_PCT) * 10_000  # (1-d) in 1e-6 micro-units
 
     # (id, deg, rank_u) rides as one frame: one up-front join, none in
     # the loop; rank_u is the rank in exact 1e-6 integer units.
@@ -125,7 +124,7 @@ def pagerank(
                 (
                     F.lit(base_u).cast("bigint")
                     + F.expr(
-                        f"(2 * {d_pct} * in_mass_e8 + 10000) div 20000"
+                        f"(2 * {DAMPING_PCT} * in_mass_e8 + 10000) div 20000"
                     )
                 ).alias("rank_u"),
             )
@@ -140,5 +139,5 @@ def pagerank(
     state = fixed_rounds(state, step, iters, every=3)
     return state.select(
         F.col("id").alias(id_out),
-        (F.col("rank_u").cast("double") / F.lit(1_000_000.0)).alias(rank_out),
+        (F.col("rank_u").cast("double") / F.lit(1_000_000.0)).alias("rank"),
     )

@@ -35,24 +35,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tda596_lab02mapreduce_spark import sidecars
+from tda596_lab02mapreduce_spark.functions.vector import EMBEDDING_DIM
 
 _Q_SCALE = 1 << 20  # power of two: exact multiply for float32 inputs
+PCA_COMPONENTS = 8  # embedding_pca_project's model width (fit and replay)
 
 
 def pca_fit(
     corpus: DataFrame,
     *,
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_components: int = 8,
     dataset_key: str | None = None,
     refit: bool = False,
 ) -> dict:
     """Fit (or fetch) the PCA model: ``{"mean_q": [dim ints],
-    "w_q": [n_components][dim ints]}`` — both floor(x * 2^20)
+    "w_q": [PCA_COMPONENTS][dim ints]}`` — both floor(x * 2^20)
     quantized.  With ``dataset_key`` the model is served from (and
     published to) the sidecar store (fit-once/serve-many)."""
-    key = (dataset_key, vec_col, dim, n_components)
+    dim = EMBEDDING_DIM
+    key = (dataset_key, "embedding", dim, PCA_COMPONENTS)
     if dataset_key is not None and not refit:
         model = sidecars.load("pca", key)
         if model is not None:
@@ -64,7 +64,7 @@ def pca_fit(
         import pyarrow as pa
 
         for batch in batches:
-            arr = batch.column(vec_col)
+            arr = batch.column("embedding")
             mat = np.asarray(arr.flatten(), dtype=np.float64).reshape(-1, dim)
             yield pa.RecordBatch.from_pydict(
                 {
@@ -74,7 +74,7 @@ def pca_fit(
                 }
             )
 
-    parts = corpus.select(vec_col).mapInArrow(
+    parts = corpus.select("embedding").mapInArrow(
         partial_moments, "n long, s1 array<double>, s2 array<double>"
     )
     # ≤ one row per Arrow batch: a k-row collect of dim²-sized
@@ -86,7 +86,7 @@ def pca_fit(
     mean = s1 / n
     cov = s2 / n - np.outer(mean, mean)
     eigvals, eigvecs = np.linalg.eigh(cov)  # ascending, deterministic
-    comps = eigvecs[:, ::-1][:, :n_components].T  # rows = top components
+    comps = eigvecs[:, ::-1][:, :PCA_COMPONENTS].T  # rows = top components
     # sign canon: largest-|w| coordinate positive (eigh's sign is
     # arbitrary; the committed sidecar must not flip across refits)
     for r in range(comps.shape[0]):
@@ -96,7 +96,7 @@ def pca_fit(
     model = {
         "mean_q": [int(np.floor(x * _Q_SCALE)) for x in mean],
         "w_q": [[int(np.floor(x * _Q_SCALE)) for x in row] for row in comps],
-        "explained_var": [float(v) for v in eigvals[::-1][:n_components]],
+        "explained_var": [float(v) for v in eigvals[::-1][:PCA_COMPONENTS]],
         "total_var": float(eigvals.sum()),
     }
     if dataset_key is not None:
@@ -108,18 +108,15 @@ def pca_project(
     spark: SparkSession,
     corpus: DataFrame,
     model: dict,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Project every vector onto the model's components as a pure
     BIGINT dot product: proj_q[d] = Σ_i w_q[d][i] * (x_q[i] - mean_q[i])
     with x_q = floor(x * 2^20).  Output (id, dim, proj_q)."""
     dim = len(model["mean_q"])
     elems = corpus.select(
-        id_col, F.posexplode(F.col(vec_col).cast("array<double>"))
+        "vec_id", F.posexplode(F.col("embedding").cast("array<double>"))
     ).select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.col("pos").alias("i"),
         F.floor(F.col("col") * _Q_SCALE).cast("bigint").alias("xq"),
     )
@@ -131,7 +128,7 @@ def pca_project(
     wdf = spark.createDataFrame(wrows, "d int, i int, wq long, mq long")
     return (
         elems.join(F.broadcast(wdf), "i")
-        .groupBy(F.col(id_col), F.col("d").alias("dim"))
+        .groupBy(F.col("vec_id"), F.col("d").alias("dim"))
         .agg(
             F.sum(F.col("wq") * (F.col("xq") - F.col("mq")))
             .cast("bigint")
@@ -140,39 +137,34 @@ def pca_project(
     )
 
 
-def pca_oracle_sql(
-    sf_dir: str,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = 64,
-    n_components: int = 8,
-) -> str:
+def pca_oracle_sql(sf_dir: str) -> str:
     """DuckDB replay of the projection against the committed sidecar:
     the identical quantized-integer model as a literal table, the
     identical BIGINT dot product."""
     model = sidecars.committed(
-        "pca", (sf_dir, vec_col, dim, n_components), "embedding_pca_project"
+        "pca",
+        (sf_dir, "embedding", EMBEDDING_DIM, PCA_COMPONENTS),
+        "embedding_pca_project",
     )
     wrows = ",\n".join(
         f"({d}, {i}, {int(model['w_q'][d][i])}, {int(model['mean_q'][i])})"
         for d in range(len(model["w_q"]))
-        for i in range(dim)
+        for i in range(EMBEDDING_DIM)
     )
     return f"""
 WITH w(d, i, wq, mq) AS (VALUES
 {wrows}
 ),
 elems AS (
-  SELECT {id_col}, u.i - 1 AS i,
+  SELECT vec_id, u.i - 1 AS i,
          CAST(FLOOR(u.x * {_Q_SCALE}) AS BIGINT) AS xq
   FROM (
-    SELECT {id_col}, unnest({vec_col}) AS x,
-           generate_subscripts({vec_col}, 1) AS i
+    SELECT vec_id, unnest(embedding) AS x,
+           generate_subscripts(embedding, 1) AS i
     FROM embeddings
   ) u
 )
-SELECT e.{id_col}, w.d AS dim,
+SELECT e.vec_id, w.d AS dim,
        CAST(SUM(w.wq * (e.xq - w.mq)) AS BIGINT) AS proj_q
 FROM elems e JOIN w ON w.i = e.i
 GROUP BY 1, 2

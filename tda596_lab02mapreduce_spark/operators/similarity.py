@@ -22,15 +22,30 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from tda596_lab02mapreduce_spark import sidecars
-from tda596_lab02mapreduce_spark.functions.vector import cosine_sim
+from tda596_lab02mapreduce_spark.functions.vector import EMBEDDING_DIM, cosine_sim
+
+# Every top-k here ranks a (cosine desc, id asc) or (d2 asc, id asc)
+# window over the ``embeddings`` fixture's (vec_id, embedding) columns.
+ANN_K = 5  # neighbors per query of ivf_topk, lsh_topk, pq_topk and both replays
+_GEMM_MARGIN = 8  # extra per-batch candidates gemm_topk keeps (see its docstring)
+# similarity_ivf_topk's quantizer and probe width, read by the query and
+# by its DuckDB replay (ivf_oracle_sql) so the two cannot drift apart
+IVF_CELLS = 8
+IVF_KMEANS_ITERS = 3
+IVF_TRAIN_FRACTION = 0.2
+IVF_PROBE = 3
+# product-quantization codebooks: subspaces × codes, Lloyd rounds, and
+# the lowest-id training sample size (pq_fit, pq_oracle_sql)
+PQ_M = 16
+PQ_CODES = 16
+PQ_ITERS = 8
+PQ_TRAIN = 4096
 
 
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     k: int = 5,
 ) -> DataFrame:
     """Exact cosine top-k neighbors per query row.
@@ -38,10 +53,10 @@ def brute_force_topk(
     Returns (query_id, neighbor_id, cosine, nbr_rank). Self-matches
     are excluded. Deterministic tiebreak on neighbor id."""
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qvec")
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cvec")
     )
     scored = (
         c.crossJoin(F.broadcast(q))
@@ -65,10 +80,7 @@ def gemm_topk(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     k: int = 5,
-    margin: int = 8,
 ) -> DataFrame:
     """Exact cosine top-k via Arrow-batched matrix multiplication —
     the vectorized fast path of ``brute_force_topk`` (same contract,
@@ -76,9 +88,9 @@ def gemm_topk(
 
     Per Arrow batch a single numpy GEMM (X_normalized @ Q_normalizedᵀ)
     scores every (corpus row, query) pair at BLAS speed instead of one
-    JVM fold per pair; each batch emits only its top (k+margin)
+    JVM fold per pair; each batch emits only its top (k+_GEMM_MARGIN)
     candidates per query (top-k of a union ⊆ union of per-part top-k,
-    so the global window over ≤ (k+margin)·|q|·n_batches candidate
+    so the global window over ≤ (k+_GEMM_MARGIN)·|q|·n_batches candidate
     rows is exact), and the corpus is never collected — only the
     bounded query matrix rides a broadcast variable.
 
@@ -86,14 +98,14 @@ def gemm_topk(
     strict left fold (and from DuckDB's list_cosine_similarity) in the
     last ~ulp, so the reported cosine is rounded to 9 dp — 1e-16
     arithmetic spread against a 5e-10 rounding boundary makes the
-    result cross-engine deterministic; the per-batch `margin` absorbs
+    result cross-engine deterministic; the per-batch margin absorbs
     any candidate reordering below the rounding grain."""
     spark = corpus.sparkSession
-    qrows = queries.select(id_col, vec_col).collect()  # bounded query set
+    qrows = queries.select("vec_id", "embedding").collect()  # bounded query set
     bq = spark.sparkContext.broadcast(
         [(int(r[0]), [float(x) for x in r[1]]) for r in qrows]
     )
-    kk = k + margin
+    kk = k + _GEMM_MARGIN
 
     def score_batches(batches):
         import numpy as np
@@ -121,13 +133,13 @@ def gemm_topk(
             for j in range(len(qids)):
                 # round BEFORE the per-batch cut so the batch-local
                 # ordering is the SAME (rounded cosine desc, id asc)
-                # ordering the global window uses — otherwise >margin
+                # ordering the global window uses — otherwise >_GEMM_MARGIN
                 # sub-5e-10 near-ties at the k boundary inside one batch
                 # could evict a row the rounded ordering ranks inside
                 # top-k (ADVICE r8 #2); with identical orderings the cut
                 # is provably exact and margin only covers self-matches.
                 col = np.round(S[:, j], 9)
-                # top (k+margin) by (cosine desc, id asc) — lexsort keys
+                # top (k+_GEMM_MARGIN) by (cosine desc, id asc) — lexsort keys
                 # are last-key-primary
                 take = np.lexsort((ids, -col))[:kk]
                 out_q.append(np.full(len(take), qids[j], dtype=np.int64))
@@ -143,7 +155,7 @@ def gemm_topk(
             )
 
     cand = corpus.select(
-        F.col(id_col).cast("long"), F.col(vec_col)
+        F.col("vec_id").cast("long"), F.col("embedding")
     ).mapInArrow(score_batches, "query_id long, neighbor_id long, cosine double")
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
@@ -199,8 +211,6 @@ def _nearest_cell(vec_field: str, cent_lit: F.Column) -> F.Column:
 def kmeans_centroids(
     points: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     k: int = 8,
     iters: int = 3,
     train_fraction: float | None = None,
@@ -238,7 +248,7 @@ def kmeans_centroids(
     # cache the projected working set: every iteration re-reads it, and
     # without persist each pass re-scans + re-decodes the parquet source
     pts = points.select(
-        F.col(id_col).alias("__pid"), F.col(vec_col).cast("array<double>").alias("__v")
+        F.col("vec_id").alias("__pid"), F.col("embedding").cast("array<double>").alias("__v")
     ).persist()
     try:
         seed_rows = pts.orderBy("__pid").limit(k).collect()
@@ -276,8 +286,6 @@ IvfModel = list[tuple[int, list[float]]]
 def ivf_fit(
     corpus: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     n_cells: int = 8,
     kmeans_iters: int = 3,
     train_fraction: float | None = None,
@@ -292,15 +300,14 @@ def ivf_fit(
     queries — and fresh processes — probe a prebuilt model instead of
     re-running Lloyd. Stale-on-data-change is the standard ANN-index
     contract: rebuilding the corpus requires ``refit=True``."""
-    key = (dataset_key, vec_col, id_col, n_cells, kmeans_iters, train_fraction)
+    # the column names stay in the key: they name the committed sidecars
+    key = (dataset_key, "embedding", "vec_id", n_cells, kmeans_iters, train_fraction)
     if dataset_key is not None and not refit:
         model = sidecars.load("ivf", key)
         if model is not None:
             return [(c, v) for c, v in model]  # JSON gives [c, v] lists
     cents = kmeans_centroids(
         corpus,
-        vec_col=vec_col,
-        id_col=id_col,
         k=n_cells,
         iters=kmeans_iters,
         train_fraction=train_fraction,
@@ -315,9 +322,6 @@ def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
     n_cells: int = 8,
     n_probe: int = 2,
     kmeans_iters: int = 3,
@@ -341,8 +345,6 @@ def ivf_topk(
     (tests/test_dedup.py), driver check is rows-only."""
     cent_rows = model if model is not None else ivf_fit(
         corpus,
-        vec_col=vec_col,
-        id_col=id_col,
         n_cells=n_cells,
         kmeans_iters=kmeans_iters,
         train_fraction=train_fraction,
@@ -351,16 +353,16 @@ def ivf_topk(
 
     # corpus assignment: map-only argmin against the literal centroids
     c_assigned = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("__cvec"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("__cvec"),
     ).withColumn("cell", _nearest_cell("__cvec", cent_lit))
 
     # each query probes its n_probe nearest cells — row-local: sort the
     # k (d2, cell) scores in-row and explode the first n_probe
     q_cells = (
         queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("__qvec"),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").cast("array<double>").alias("__qvec"),
         )
         .withColumn(
             "cell",
@@ -389,7 +391,7 @@ def ivf_topk(
     )
     return (
         scored.withColumn("nbr_rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("nbr_rank") <= k)
+        .filter(F.col("nbr_rank") <= ANN_K)
     )
 
 
@@ -458,10 +460,6 @@ def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
-    dim: int = 64,
     n_planes: int = 6,
     n_tables: int = 4,
 ) -> DataFrame:
@@ -476,21 +474,23 @@ def lsh_topk(
         return df.select(
             F.col(idc),
             F.col(vecc),
-            F.posexplode(lsh_buckets(F.col(vecc), dim, n_planes, n_tables)).alias(
+            F.posexplode(
+                lsh_buckets(F.col(vecc), EMBEDDING_DIM, n_planes, n_tables)
+            ).alias(
                 "tbl", "bucket"
             ),
         )
 
     q = with_buckets(
         queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qvec")
         ),
         "query_id",
         "__qvec",
     )
     c = with_buckets(
         corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cvec")
         ),
         "neighbor_id",
         "__cvec",
@@ -511,7 +511,7 @@ def lsh_topk(
     )
     return (
         scored.withColumn("nbr_rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("nbr_rank") <= k)
+        .filter(F.col("nbr_rank") <= ANN_K)
     )
 
 
@@ -524,38 +524,33 @@ PqModel = list  # [subspace][code] -> centroid subvector (list[float])
 def pq_fit(
     corpus: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     m: int = 8,
-    k: int = 16,
-    iters: int = 8,
-    n_train: int = 4096,
     dataset_key: str | None = None,
     refit: bool = False,
 ) -> "PqModel":
     """Fit (or fetch) product-quantization codebooks (Jégou et al., "
     "TPAMI'11): split the dim-D vector into ``m`` subvectors and run "
-    "an independent k-means (``k`` codes) in each subspace.
+    "an independent k-means (``PQ_CODES`` codes) in each subspace.
 
     Training follows the Faiss contract exactly: Lloyd runs IN MEMORY
-    on a BOUNDED sample (the ``n_train`` lowest-id vectors — a
+    on a BOUNDED sample (the ``PQ_TRAIN`` lowest-id vectors — a
     deterministic stand-in for Faiss's shuffled subsample), because a
     codebook needs only enough points per code to place centroids; the
-    collect moves n_train×D floats ONCE, never the corpus.  Encoding
+    collect moves PQ_TRAIN×D floats ONCE, never the corpus.  Encoding
     and probing (pq_topk) stay fully distributed.  Same sidecar-store
     protocol as ivf_fit — fit-once/serve-many."""
     import numpy as np
 
-    key = (dataset_key, vec_col, id_col, m, k, iters, n_train)
+    key = (dataset_key, "embedding", "vec_id", m, PQ_CODES, PQ_ITERS, PQ_TRAIN)
     if dataset_key is not None and not refit:
         model = sidecars.load("pq", key)
         if model is not None:
             return model
 
     rows = (
-        corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>"))
-        .orderBy(id_col)
-        .limit(n_train)
+        corpus.select(F.col("vec_id"), F.col("embedding").cast("array<double>"))
+        .orderBy("vec_id")
+        .limit(PQ_TRAIN)
         .collect()
     )
     x = np.asarray([list(r[1]) for r in rows], dtype=np.float64)
@@ -566,8 +561,8 @@ def pq_fit(
     model = []
     for j in range(m):
         sub = x[:, j * d : (j + 1) * d]
-        cents = sub[: min(k, n)].copy()  # deterministic seeds: first k rows
-        for _ in range(iters):
+        cents = sub[: min(PQ_CODES, n)].copy()  # deterministic seeds: first rows
+        for _ in range(PQ_ITERS):
             # assign: n×k squared L2, argmin (lowest code wins ties)
             d2 = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
             a = d2.argmin(axis=1)
@@ -582,9 +577,7 @@ def pq_fit(
     return model
 
 
-def pq_encode(
-    df: DataFrame, vec_col: str, id_col: str, model: "PqModel"
-) -> DataFrame:
+def pq_encode(df: DataFrame, model: "PqModel") -> DataFrame:
     """``(neighbor_id, codes array<int>)`` — Arrow-batched numpy
     encoding: one argmin over an (batch × k) distance matrix per
     subspace per batch.  The first cut built this as a literal
@@ -620,8 +613,8 @@ def pq_encode(
             )
 
     src = df.select(
-        F.col(id_col).cast("long").alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("__vec"),
+        F.col("vec_id").cast("long").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("__vec"),
     )
     return src.mapInArrow(encode, "neighbor_id long, codes array<int>")
 
@@ -630,9 +623,6 @@ def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
     model: "PqModel",
     refine: int | None = None,
 ) -> DataFrame:
@@ -663,8 +653,8 @@ def pq_topk(
     m = len(model)
     d = len(model[0][0])
     q_rows = (
-        queries.select(F.col(id_col), F.col(vec_col).cast("array<double>"))
-        .orderBy(id_col)
+        queries.select(F.col("vec_id"), F.col("embedding").cast("array<double>"))
+        .orderBy("vec_id")
         .collect()
     )
     cents = [np.asarray(sub, dtype=np.float64) for sub in model]
@@ -685,7 +675,7 @@ def pq_topk(
             lut_rows, f"query_id bigint, lut array<array<double>>"
         )
     )
-    coded = pq_encode(corpus, vec_col, id_col, model)
+    coded = pq_encode(corpus, model)
     adc = F.aggregate(
         F.zip_with(
             F.col("codes"),
@@ -705,7 +695,7 @@ def pq_topk(
     )
     shortlist = (
         scored.withColumn("nbr_rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("nbr_rank") <= (refine or k))
+        .filter(F.col("nbr_rank") <= (refine or ANN_K))
     )
     if refine is None:
         return shortlist
@@ -719,8 +709,8 @@ def pq_topk(
         )
     )
     c_exact = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("__cvec"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("__cvec"),
     )
     exact_d2 = F.aggregate(
         F.zip_with(
@@ -740,7 +730,7 @@ def pq_topk(
     )
     return (
         refined.withColumn("nbr_rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("nbr_rank") <= k)
+        .filter(F.col("nbr_rank") <= ANN_K)
     )
 
 
@@ -772,25 +762,14 @@ def _sql_double(x: float) -> str:
     return repr(float(x))
 
 
-def ivf_oracle_sql(
-    sf_dir: str = CORRECTNESS_SF,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_cells: int = 8,
-    kmeans_iters: int = 3,
-    train_fraction: float = 0.2,
-    n_probe: int = 3,
-    k: int = 5,
-    dim: int = 64,
-) -> str:
+def ivf_oracle_sql(sf_dir: str = CORRECTNESS_SF) -> str:
     """DuckDB replay of the ivf_topk SERVING path against the committed
     sidecar model: argmin-L2 cell assignment (tie → lowest cell) for
     the corpus, n_probe nearest cells per query (vec_id < 10), exact
     cosine within probed cells, top-k by (cosine DESC, neighbor_id)."""
     model = sidecars.committed(
         "ivf",
-        (sf_dir, vec_col, id_col, n_cells, kmeans_iters, train_fraction),
+        (sf_dir, "embedding", "vec_id", IVF_CELLS, IVF_KMEANS_ITERS, IVF_TRAIN_FRACTION),
         "similarity_ivf_topk",
     )
     rows = ",\n".join(
@@ -804,7 +783,7 @@ cents(cell, cen) AS (VALUES
 ),
 d AS (
   SELECT e.vec_id, cents.cell,
-         list_reduce(list_transform(range(1, {dim + 1}),
+         list_reduce(list_transform(range(1, {EMBEDDING_DIM + 1}),
              j -> (e.v[j] - cents.cen[j]) * (e.v[j] - cents.cen[j])),
            (a, b) -> a + b) AS d2
   FROM e, cents
@@ -821,7 +800,7 @@ qc AS (
     SELECT vec_id, cell,
            row_number() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS rn
     FROM d WHERE vec_id < 10
-  ) WHERE rn <= {n_probe}
+  ) WHERE rn <= {IVF_PROBE}
 ),
 scored AS (
   SELECT qc.query_id, a.vec_id AS neighbor_id,
@@ -835,33 +814,21 @@ SELECT query_id, neighbor_id, cosine, CAST(nbr_rank AS BIGINT) AS nbr_rank
 FROM (SELECT *, row_number() OVER (
         PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS nbr_rank
       FROM scored)
-WHERE nbr_rank <= {k}
+WHERE nbr_rank <= {ANN_K}
 """
 
 
-def pq_oracle_sql(
-    sf_dir: str = CORRECTNESS_SF,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    m: int = 16,
-    k_codes: int = 16,
-    iters: int = 8,
-    n_train: int = 4096,
-    refine: int = 50,
-    k: int = 5,
-    dim: int = 64,
-) -> str:
+def pq_oracle_sql(sf_dir: str = CORRECTNESS_SF, *, refine: int = 50) -> str:
     """DuckDB replay of the pq_topk SERVING path against the committed
     sidecar codebooks: per-subspace argmin encoding (tie → lowest
     code), per-query LUT, ADC = j-ordered left-fold sum rounded to
-    6 dp, top-``refine`` shortlist, exact-L2 re-rank to top-``k``."""
+    6 dp, top-``refine`` shortlist, exact-L2 re-rank to top-``ANN_K``."""
     model = sidecars.committed(
         "pq",
-        (sf_dir, vec_col, id_col, m, k_codes, iters, n_train),
+        (sf_dir, "embedding", "vec_id", PQ_M, PQ_CODES, PQ_ITERS, PQ_TRAIN),
         "similarity_pq_topk",
     )
-    d = dim // m
+    d = EMBEDDING_DIM // PQ_M
     rows = ",\n".join(
         f"({j}, {c}, [{', '.join(_sql_double(x) for x in cen)}]::DOUBLE[])"
         for j, sub in enumerate(model)
@@ -914,7 +881,7 @@ short AS (
 ),
 ref AS (
   SELECT s.query_id, s.neighbor_id,
-         round(list_reduce(list_transform(range(1, {dim + 1}),
+         round(list_reduce(list_transform(range(1, {EMBEDDING_DIM + 1}),
              t -> (qe.v[t] - ce.v[t]) * (qe.v[t] - ce.v[t])),
            (a, b) -> a + b), 6) AS d2
   FROM short s
@@ -925,5 +892,5 @@ SELECT query_id, neighbor_id, d2, CAST(nbr_rank AS BIGINT) AS nbr_rank
 FROM (SELECT *, row_number() OVER (
         PARTITION BY query_id ORDER BY d2, neighbor_id) AS nbr_rank
       FROM ref)
-WHERE nbr_rank <= {k}
+WHERE nbr_rank <= {ANN_K}
 """

@@ -513,8 +513,7 @@ def _hits_oracle() -> str:
 
     return hits_oracle_sql(
         "e AS (SELECT DISTINCT o.o_custkey AS src, l.l_partkey AS dst\n"
-        "      FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey)",
-        iters=5,
+        "      FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey)"
     )
 
 
@@ -546,7 +545,7 @@ def hits_copurchase_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = orders.join(li, orders.o_orderkey == li.l_orderkey).select(
         F.col("o_custkey").alias("src"), F.col("l_partkey").alias("dst")
     )
-    return hits(edges, iters=5)
+    return hits(edges)
 
 
 def _kcore_oracle(k: int, rounds: int) -> str:

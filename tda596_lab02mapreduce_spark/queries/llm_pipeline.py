@@ -253,8 +253,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # across all cores (a cluster scan would already have enough splits)
     n_part = spark.sparkContext.defaultParallelism
     return dd.minhash_near_dup_pairs(
-        docs, "text", "doc_id", num_perm=16, bands=4, threshold=0.5,
-        n_partitions=n_part, family="md5lin",
+        docs, "text", "doc_id", threshold=0.5, n_partitions=n_part, family="md5lin",
     )
 
 
@@ -311,7 +310,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         "doc_id",
         max_hamming=12,
-        chunks=4,
         n_partitions=spark.sparkContext.defaultParallelism,
         family="md5",
     )
@@ -506,7 +504,7 @@ WHERE nbr_rank <= 5
 def similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = io.load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return sim.lsh_topk(emb, queries, k=5, dim=64, n_planes=8)
+    return sim.lsh_topk(emb, queries, n_planes=8)
 
 
 @register(
@@ -536,9 +534,13 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = io.load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     model = sim.ivf_fit(
-        emb, n_cells=8, kmeans_iters=3, train_fraction=0.2, dataset_key=sf_dir
+        emb,
+        n_cells=sim.IVF_CELLS,
+        kmeans_iters=sim.IVF_KMEANS_ITERS,
+        train_fraction=sim.IVF_TRAIN_FRACTION,
+        dataset_key=sf_dir,
     )
-    return sim.ivf_topk(emb, queries, k=5, n_cells=8, n_probe=3, model=model)
+    return sim.ivf_topk(emb, queries, n_probe=sim.IVF_PROBE, model=model)
 
 
 @register(
@@ -1094,7 +1096,7 @@ def triangle_count_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pagerank_oracle(iters: int = 10) -> str:
+def _pagerank_oracle() -> str:
     """Unrolled SQL replay of operators/pagerank.py's fixed-round
     integer-micro-unit iteration (rank in exact 1e-6 BIGINT units,
     shares half-up-quantized to 1e-8 units, integer sums — zero
@@ -1102,14 +1104,20 @@ def _pagerank_oracle(iters: int = 10) -> str:
     bit-for-bit by construction).  Unrolled rather than WITH
     RECURSIVE because the round count is FIXED and plain CTE stages
     dodge every engine's recursive-aggregate restrictions."""
+    from tda596_lab02mapreduce_spark.operators.pagerank import (
+        DAMPING_PCT,
+        PAGERANK_ROUNDS,
+    )
+
+    base_u = (100 - DAMPING_PCT) * 10_000
     stages = [
         "pr0 AS (SELECT id, deg, CAST(1000000 AS BIGINT) AS rank_u FROM deg)"
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, PAGERANK_ROUNDS + 1):
         stages.append(
             f"""pr{i} AS (
   SELECT d.id, d.deg,
-         CAST(150000 + (170 * m.in_mass_e8 + 10000) // 20000 AS BIGINT) AS rank_u
+         CAST({base_u} + ({2 * DAMPING_PCT} * m.in_mass_e8 + 10000) // 20000 AS BIGINT) AS rank_u
   FROM (SELECT e.dst AS id,
                SUM((200 * p.rank_u + p.deg) // (2 * p.deg)) AS in_mass_e8
         FROM pr{i - 1} p JOIN e ON e.src = p.id GROUP BY e.dst) m
@@ -1138,13 +1146,13 @@ e AS (SELECT u AS src, v AS dst FROM p UNION ALL SELECT v, u FROM p),
 deg AS (SELECT src AS id, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY src),
 """
         + ",\n".join(stages)
-        + f"\nSELECT id AS doc_id, CAST(rank_u AS DOUBLE) / 1000000.0 AS rank FROM pr{iters}"
+        + f"\nSELECT id AS doc_id, CAST(rank_u AS DOUBLE) / 1000000.0 AS rank FROM pr{PAGERANK_ROUNDS}"
     )
 
 
 @register(
     "pagerank_neardup_hubs",
-    oracle=_pagerank_oracle(10),
+    oracle=_pagerank_oracle(),
     doc=(
         "PageRank over the shared-shingle similarity graph: docs are "
         "linked when they share >= 2 distinct 3-shingles drawn from "
@@ -1221,7 +1229,7 @@ def pagerank_neardup_hubs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= 2)
     )
-    return pagerank(pairs, "id_a", "id_b", id_out="doc_id", rank_out="rank")
+    return pagerank(pairs, "id_a", "id_b", id_out="doc_id")
 
 
 @register(
@@ -2014,12 +2022,8 @@ def _pq_refine(sf_dir: str) -> int:
 def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = io.load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    model = sim.pq_fit(
-        emb, m=16, k=16, iters=8, n_train=4096, dataset_key=sf_dir
-    )
-    return sim.pq_topk(
-        emb, queries, k=5, model=model, refine=_pq_refine(sf_dir)
-    )
+    model = sim.pq_fit(emb, m=sim.PQ_M, dataset_key=sf_dir)
+    return sim.pq_topk(emb, queries, model=model, refine=_pq_refine(sf_dir))
 
 
 @register(

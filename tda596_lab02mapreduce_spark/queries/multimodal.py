@@ -39,7 +39,7 @@ FROM documents
 )
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = mm.media_table_from_documents(io.load(spark, sf_dir, "documents"))
-    return mm.extract_features(media, n_features=8).select(
+    return mm.extract_features(media).select(
         "media_id", "n_bytes", "content_md5"
     )
 
@@ -61,7 +61,7 @@ WHERE doc_id % 5 = 0
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = mm.media_table_from_documents(io.load(spark, sf_dir, "documents"))
-    return mm.frame_sample(media, every_ms=1000)
+    return mm.frame_sample(media)
 
 
 @register(
@@ -127,7 +127,7 @@ def multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("media_id"),
         F.encode("text", "utf-8").alias("blob"),
     )
-    return mm.audio_frame_energy(audio, frame=256)
+    return mm.audio_frame_energy(audio)
 
 
 @register(

@@ -406,7 +406,7 @@ GROUP BY c_mktsegment
 def sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = io.load(spark, sf_dir, "customer")
     path = _sink_path(sf_dir, "customer_csv")
-    sources.write_csv(cust, path)
+    cust.write.mode("overwrite").option("header", "true").csv(path)
     back = sources.read_csv(
         spark,
         path,
@@ -557,7 +557,13 @@ def sink_python_textkv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mode("overwrite")
         .save()
     )
-    lines = spark.read.text(os.path.join(path, "mr-out-*"))
+    # the committed files by name: a glob would make Spark probe
+    # mr-out-*/_spark_metadata (a FileStreamSink WARN per call), and the
+    # bare directory would also read a crashed writer's tmp-worker-* file
+    files = sorted(
+        os.path.join(path, f) for f in os.listdir(path) if f.startswith("mr-out-")
+    )
+    lines = spark.read.text(files)
     parts = F.split(F.col("value"), " ")
     return lines.select(
         parts.getItem(0).alias("word"),
@@ -565,14 +571,14 @@ def sink_python_textkv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _zvalue(a, b, bits: int = 16):
-    """Morton/Z-order interleave of the low ``bits`` of two keys — a
+def _zvalue(a, b):
+    """Morton/Z-order interleave of the low 16 bits of two keys — a
     constant-size JVM expression chain (no UDF): bit i of a lands at
     2i, bit i of b at 2i+1."""
-    a = F.pmod(a.cast("long"), F.lit(1 << bits))
-    b = F.pmod(b.cast("long"), F.lit(1 << bits))
+    a = F.pmod(a.cast("long"), F.lit(1 << 16))
+    b = F.pmod(b.cast("long"), F.lit(1 << 16))
     z = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(16):
         z = (
             z.bitwiseOR(
                 F.shiftleft(F.shiftright(a, i).bitwiseAND(F.lit(1)), 2 * i)
@@ -743,7 +749,7 @@ FROM customer
 def source_csv_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = io.load(spark, sf_dir, "customer")
     path = _sink_path(sf_dir, "customer_csv_corrupt")
-    sources.write_csv(cust, path)
+    cust.write.mode("overwrite").option("header", "true").csv(path)
     # Inject a bad file: first line is consumed as that file's header
     # (header=true skips one line per file), then _CORRUPT_ROWS rows
     # whose key/numeric fields cannot parse under the declared schema.

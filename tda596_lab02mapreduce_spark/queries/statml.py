@@ -3409,11 +3409,12 @@ def perceptron_batch_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _LOGIT_Z = "CAST(b.w0 + b.w1 * f.x1 + b.w2 * f.x2 AS DOUBLE) / 1000000.0"
+_LOGISTIC_ROUNDS = 4  # GD rounds of _logistic_fit and of every replay below
 
 
-def _logistic_ctes(rounds: int) -> str:
+def _logistic_ctes() -> str:
     """WITH-body training prefix shared by the logistic queries: feat,
-    b0 .. b{rounds} (weights in BIGINT micro-units)."""
+    b0 .. b{_LOGISTIC_ROUNDS} (weights in BIGINT micro-units)."""
     parts = [
         """feat AS MATERIALIZED (
   SELECT CAST(FLOOR(o_totalprice / 50000) AS BIGINT) AS x1,
@@ -3425,7 +3426,7 @@ def _logistic_ctes(rounds: int) -> str:
 b0 AS (SELECT CAST(0 AS BIGINT) AS w0, CAST(0 AS BIGINT) AS w1,
               CAST(0 AS BIGINT) AS w2)"""
     ]
-    for i in range(1, rounds + 1):
+    for i in range(1, _LOGISTIC_ROUNDS + 1):
         parts.append(
             f"""b{i} AS (
   SELECT bw0 + CAST(ROUND(CAST(SUM(c) AS DOUBLE) / (8.0 * count(*)), 0)
@@ -3451,7 +3452,7 @@ b0 AS (SELECT CAST(0 AS BIGINT) AS w0, CAST(0 AS BIGINT) AS w1,
 @register(
     "logistic_gd_priority",
     oracle="WITH "
-    + _logistic_ctes(4)
+    + _logistic_ctes()
     + """
 SELECT b.w0 AS w0_us, b.w1 AS w1_us, b.w2 AS w2_us,
        CAST(SUM(CASE WHEN (CASE WHEN b.w0 + b.w1 * f.x1 + b.w2 * f.x2 >= 0
@@ -3485,7 +3486,7 @@ GROUP BY b.w0, b.w1, b.w2
     tags=("statml", "agg", "ml"),
 )
 def logistic_gd_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    feat, beta = _logistic_train(spark, sf_dir, rounds=4)
+    feat, beta = _logistic_train(spark, sf_dir)
     z_us = (
         F.col("w0") + F.col("w1") * F.col("x1") + F.col("w2") * F.col("x2")
     )
@@ -3506,7 +3507,7 @@ def logistic_gd_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _logistic_train(spark: SparkSession, sf_dir: str, *, rounds: int = 4):
+def _logistic_train(spark: SparkSession, sf_dir: str):
     """Shared fixed-round logistic GD trainer: returns (feat, beta) —
     the cached integer feature frame and the 1-row trained-weights
     frame (BIGINT micro-units), mirroring _logistic_ctes exactly."""
@@ -3519,14 +3520,14 @@ def _logistic_train(spark: SparkSession, sf_dir: str, *, rounds: int = 4):
         .cast("bigint")
         .alias("y"),
     ).localCheckpoint(eager=False)
-    return feat, _logistic_fit(spark, feat, rounds=rounds)
+    return feat, _logistic_fit(spark, feat)
 
 
-def _logistic_fit(spark: SparkSession, feat: DataFrame, *, rounds: int = 4):
+def _logistic_fit(spark: SparkSession, feat: DataFrame):
     """The GD loop on a given (x1, x2, y) frame — factored out so the
     k-fold CV query can train per held-out fold on the same algebra."""
     beta = spark.createDataFrame([(0, 0, 0)], "w0 long, w1 long, w2 long")
-    for _ in range(rounds):
+    for _ in range(_LOGISTIC_ROUNDS):
         z = (
             (
                 F.col("w0")
@@ -3557,7 +3558,7 @@ def _logistic_fit(spark: SparkSession, feat: DataFrame, *, rounds: int = 4):
 @register(
     "roc_auc_logistic_score",
     oracle="WITH "
-    + _logistic_ctes(4)
+    + _logistic_ctes()
     + """,
 scored AS (
   SELECT b.w0 + b.w1 * f.x1 + b.w2 * f.x2 AS score, f.y AS pos
@@ -3603,7 +3604,7 @@ FROM s
 def roc_auc_logistic_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tda596_lab02mapreduce_spark.functions.rank import global_rank_cumsum
 
-    feat, beta = _logistic_train(spark, sf_dir, rounds=4)
+    feat, beta = _logistic_train(spark, sf_dir)
     scored = feat.crossJoin(F.broadcast(beta)).select(
         (
             F.col("w0") + F.col("w1") * F.col("x1") + F.col("w2") * F.col("x2")
@@ -3833,7 +3834,7 @@ def ab_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "calibration_logistic_trained",
     oracle="WITH "
-    + _logistic_ctes(4)
+    + _logistic_ctes()
     + """,
 scored AS (
   SELECT CAST(b.w0 + b.w1 * f.x1 + b.w2 * f.x2 AS DOUBLE) / 1000000.0 AS z,
@@ -3869,7 +3870,7 @@ FROM p GROUP BY bin ORDER BY bin
     tags=("statml", "stats", "ml", "agg"),
 )
 def calibration_logistic_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    feat, beta = _logistic_train(spark, sf_dir, rounds=4)
+    feat, beta = _logistic_train(spark, sf_dir)
     z = (
         (
             F.col("w0")
@@ -4130,7 +4131,7 @@ def _conformal_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores with the deterministic md5 calibration/test fold.  Columns
     (okey, y, p, fold, s): p = rational sigmoid over the BIGINT
     weights (bit-identical cross-engine), s = 1 - p(true class)."""
-    _, beta = _logistic_train(spark, sf_dir, rounds=4)
+    _, beta = _logistic_train(spark, sf_dir)
     orders = io.load(spark, sf_dir, "orders")
     feat2 = orders.select(
         F.col("o_orderkey").alias("okey"),
@@ -4174,7 +4175,7 @@ def _conformal_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "conformal_priority_coverage",
     oracle="WITH "
-    + _logistic_ctes(4)
+    + _logistic_ctes()
     + """,
 feat2 AS (
   SELECT o_orderkey AS okey,
@@ -4294,7 +4295,7 @@ def conformal_priority_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "conformal_mondrian_by_class",
     oracle="WITH "
-    + _logistic_ctes(4)
+    + _logistic_ctes()
     + """,
 feat2 AS (
   SELECT o_orderkey AS okey,
@@ -4609,9 +4610,9 @@ def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CV_FOLDS = 5
 
 
-def _logistic_cv_oracle(rounds: int = 4, folds: int = _CV_FOLDS) -> str:
+def _logistic_cv_oracle() -> str:
     """Unrolled CTE oracle: ONE fold-tagged feature CTE, then per fold
-    an independent {rounds}-round GD trajectory on the complement and
+    an independent _LOGISTIC_ROUNDS-round GD trajectory on the complement and
     an accuracy row on the held-out fold — the _logistic_ctes shape
     replicated k times (the BPE/logistic unrolling discipline)."""
     zf = "CAST(b.w0 + b.w1 * f.x1 + b.w2 * f.x2 AS DOUBLE) / 1000000.0"
@@ -4624,9 +4625,9 @@ def _logistic_cv_oracle(rounds: int = 4, folds: int = _CV_FOLDS) -> str:
          CAST('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8)
               AS BIGINT) % {folds} AS fold
   FROM orders
-)""".replace("{folds}", str(folds))
+)""".replace("{folds}", str(_CV_FOLDS))
     ]
-    for k in range(folds):
+    for k in range(_CV_FOLDS):
         blocks.append(
             f"""tr{k} AS MATERIALIZED (
   SELECT x1, x2, y FROM featk WHERE fold <> {k}
@@ -4636,7 +4637,7 @@ def _logistic_cv_oracle(rounds: int = 4, folds: int = _CV_FOLDS) -> str:
             f"""b{k}_0 AS (SELECT CAST(0 AS BIGINT) AS w0,
                     CAST(0 AS BIGINT) AS w1, CAST(0 AS BIGINT) AS w2)"""
         )
-        for i in range(1, rounds + 1):
+        for i in range(1, _LOGISTIC_ROUNDS + 1):
             blocks.append(
                 f"""b{k}_{i} AS (
   SELECT bw0 + CAST(ROUND(CAST(SUM(c) AS DOUBLE) / (8.0 * count(*)), 0)
@@ -4663,10 +4664,10 @@ def _logistic_cv_oracle(rounds: int = 4, folds: int = _CV_FOLDS) -> str:
                                 THEN 1 ELSE 0 END) = f.y
                      THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
        CAST(count(*) AS BIGINT) AS n_test
-FROM featk f, b{k}_{rounds} b
+FROM featk f, b{k}_{_LOGISTIC_ROUNDS} b
 WHERE f.fold = {k}
 GROUP BY b.w0, b.w1, b.w2"""
-        for k in range(folds)
+        for k in range(_CV_FOLDS)
     )
     return "WITH " + ",\n".join(blocks) + "\n" + evals
 
@@ -4716,9 +4717,7 @@ def cv_logistic_fold_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=False)
     out = None
     for k in range(_CV_FOLDS):
-        beta = _logistic_fit(
-            spark, feat.filter(F.col("fold") != k), rounds=4
-        )
+        beta = _logistic_fit(spark, feat.filter(F.col("fold") != k))
         z_us = (
             F.col("w0") + F.col("w1") * F.col("x1") + F.col("w2") * F.col("x2")
         )

@@ -6,7 +6,6 @@ from tda596_lab02mapreduce_spark.sources.files import (
     read_avro,
     read_text_lines,
     read_whole_files,
-    write_csv,
     write_avro,
 )
 
@@ -18,6 +17,5 @@ __all__ = [
     "read_avro",
     "read_text_lines",
     "read_whole_files",
-    "write_csv",
     "write_avro",
 ]

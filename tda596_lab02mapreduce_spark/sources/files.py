@@ -12,9 +12,10 @@ granularity — (filename, contents), one row per file — for the
 MapReduce façade. Line-granularity ``read_text_lines`` is the
 scalable default (a 10 GB file splits across executors).
 
-Formats with nothing to configure (parquet, ORC, JSON out) are read
-and written with ``spark.read`` / ``df.write`` directly; the helpers
-here set reader options (CSV, JSON in) or check for a connector (Avro).
+Formats with nothing to configure (parquet, ORC, JSON and CSV out) are
+read and written with ``spark.read`` / ``df.write`` directly; the
+helpers here set reader options (CSV, JSON in) or check for a connector
+(Avro).
 """
 
 from __future__ import annotations
@@ -108,9 +109,7 @@ def read_avro(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.format("avro").load(path)
 
 
-def write_avro(
-    df: DataFrame, path: str, *, mode: str = "overwrite", partition_by: list[str] | None = None
-) -> None:
+def write_avro(df: DataFrame, path: str) -> None:
     if not avro_available(df.sparkSession):
         raise NotImplementedError(
             "Avro sink requires the spark-avro connector jar "
@@ -118,14 +117,7 @@ def write_avro(
             "container; deploy with --packages org.apache.spark:"
             f"spark-avro_2.13:{df.sparkSession.version} to enable"
         )
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.format("avro").save(path)
-
-
-def write_csv(df: DataFrame, path: str, *, mode: str = "overwrite", sep: str = ",") -> None:
-    df.write.mode(mode).option("header", "true").option("sep", sep).csv(path)
+    df.write.mode("overwrite").format("avro").save(path)
 
 
 def compact_parquet(

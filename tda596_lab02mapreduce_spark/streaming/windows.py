@@ -19,7 +19,6 @@ from __future__ import annotations
 import hashlib
 import os
 import tempfile
-import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -105,8 +104,8 @@ def table_stream(
     ``copies``/``max_files``: explicit multi-batch staging for
     queries whose SEMANTICS need a deterministic batch count (the
     model-swap serve drains copies=2 / max_files=1 → exactly 2
-    micro-batches of the full table) — unlike the env knob, which is
-    a probe-only override."""
+    micro-batches of the full table) — unlike
+    ``SPARK_GRAFT_STREAM_MAX_FILES``, which is a probe-only override."""
     schema = io.table(spark, sf_dir, table).schema
     reader = spark.readStream.schema(schema).format("parquet")
     mft = (
@@ -130,11 +129,12 @@ def events_stream(spark: SparkSession, sf_dir: str, *, copies: int = 1) -> DataF
     )
 
 
-def tumbling_agg(events: DataFrame, *, width: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
-    """Per-type event counts + decimal-sum of value in tumbling windows."""
+def tumbling_agg(events: DataFrame) -> DataFrame:
+    """Per-type event counts + decimal-sum of value in 1-hour tumbling
+    windows (2-hour watermark)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("w"), "event_type")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
@@ -148,31 +148,24 @@ def tumbling_agg(events: DataFrame, *, width: str = "1 hour", watermark: str = "
     )
 
 
-def sliding_agg(
-    events: DataFrame,
-    *,
-    width: str = "2 hours",
-    slide: str = "1 hour",
-    watermark: str = "4 hours",
-) -> DataFrame:
-    """Sliding windows: each event lands in width/slide windows."""
+def sliding_agg(events: DataFrame) -> DataFrame:
+    """Sliding 2-hour windows every hour (4-hour watermark): each event
+    lands in two windows."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width, slide).alias("w"))
+        events.withWatermark("ts", "4 hours")
+        .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("window_start"), "n_events")
     )
 
 
-def session_agg(
-    events: DataFrame, *, gap: str = "10 minutes", watermark: str = "1 hour"
-) -> DataFrame:
-    """Session windows per user: a session closes after `gap` of
-    inactivity. State size is O(open sessions), bounded by the
+def session_agg(events: DataFrame) -> DataFrame:
+    """Session windows per user: a session closes after 10 minutes of
+    inactivity. State size is O(open sessions), bounded by the 1-hour
     watermark."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", "1 hour")
+        .groupBy(F.session_window("ts", "10 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("w.start").alias("session_start"),
@@ -183,11 +176,11 @@ def session_agg(
     )
 
 
-def stream_dedup(events: DataFrame, *, watermark: str = "1 hour") -> DataFrame:
-    """Exactly-once-per-event-id within the watermark horizon
+def stream_dedup(events: DataFrame) -> DataFrame:
+    """Exactly-once-per-event-id within the 1-hour watermark horizon
     (dropDuplicatesWithinWatermark keeps state bounded — plain
     dropDuplicates on a stream retains ALL history)."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    return events.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
 
@@ -289,8 +282,7 @@ class drain_conf:
     the cluster's setting. Batch counts, watermark semantics, and
     per-key grouping are partition-count-independent, so drained
     results are unchanged (the batch-boundary oracles stay green).
-    Env override: SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS, a positive
-    integer; any other value warns and falls back to the derived size.
+    ``n_bytes=None`` (size unknown) leaves the session's setting as is.
     The streaming query CLONES the session conf at start, so restoring
     the value after the drain cannot affect the finished query. The
     setting is session-global while the drain starts: it assumes one
@@ -302,29 +294,13 @@ class drain_conf:
         self._old: str | None = None
 
     def __enter__(self):
-        env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
-        if env and not (env.isascii() and env.isdigit() and int(env) >= 1):
-            warnings.warn(
-                f"SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS={env!r} is not a "
-                "positive integer; ignoring it and sizing the drain from "
-                "its input bytes",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            env = None
-        if env:
-            parts: int | None = int(env)
-        elif self._bytes is None:
-            parts = None
-        else:
-            cur = int(self._spark.conf.get("spark.sql.shuffle.partitions"))
+        if self._bytes is not None:
+            self._old = self._spark.conf.get("spark.sql.shuffle.partitions")
             derived = max(
                 _DRAIN_MIN_PARTITIONS,
                 -(-self._bytes // _DRAIN_BYTES_PER_PARTITION),
             )
-            parts = min(cur, derived)
-        if parts is not None:
-            self._old = self._spark.conf.get("spark.sql.shuffle.partitions")
+            parts = min(int(self._old), derived)
             self._spark.conf.set("spark.sql.shuffle.partitions", str(parts))
         return self
 
@@ -365,15 +341,10 @@ def run_available_now(
     return stream_df.sparkSession.table(query_name)
 
 
-def purchase_click_attribution(
-    events: DataFrame,
-    *,
-    watermark: str = "2 hours",
-    lookback: str = "30 minutes",
-) -> DataFrame:
+def purchase_click_attribution(events: DataFrame) -> DataFrame:
     """Stream-stream interval self-join: every (purchase, click) pair
     for the same user where the click precedes the purchase by at most
-    ``lookback`` — the attribution join. Batch and stream share this
+    30 minutes — the attribution join (2-hour watermarks). Batch and stream share this
     definition; on a stream, BOTH sides carry watermarks and the join
     condition time-bounds the buffered state (without the bound a
     stream-stream join must retain each side forever)."""
@@ -384,7 +355,7 @@ def purchase_click_attribution(
             F.col("user_id"),
             F.col("ts").alias("p_ts"),
         )
-        .withWatermark("p_ts", watermark)
+        .withWatermark("p_ts", "2 hours")
     )
     c = (
         events.filter(F.col("event_type") == "click")
@@ -393,13 +364,13 @@ def purchase_click_attribution(
             F.col("user_id").alias("c_user_id"),
             F.col("ts").alias("c_ts"),
         )
-        .withWatermark("c_ts", watermark)
+        .withWatermark("c_ts", "2 hours")
     )
     joined = p.join(
         c,
         (F.col("user_id") == F.col("c_user_id"))
         & (F.col("c_ts") <= F.col("p_ts"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"interval {lookback}")),
+        & (F.col("c_ts") >= F.col("p_ts") - F.expr("interval 30 minutes")),
     )
     return joined.select(
         "purchase_id",
@@ -409,17 +380,12 @@ def purchase_click_attribution(
     )
 
 
-def enriched_segment_agg(
-    events: DataFrame,
-    customer: DataFrame,
-    *,
-    width: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def enriched_segment_agg(events: DataFrame, customer: DataFrame) -> DataFrame:
     """Stream-static enrichment: join the (possibly streaming) event
     feed against the static customer dimension (user_id = c_custkey-1,
-    the fixture's surrogate mapping), then window-aggregate per market
-    segment. The dim side carries NO broadcast hint: customer is
+    the fixture's surrogate mapping), then aggregate per market segment
+    in 1-hour tumbling windows (2-hour watermark). The dim side carries
+    NO broadcast hint: customer is
     catalog-proportional (150k x SF), so plan-time stats broadcast the
     2-column projection per micro-batch below threshold (fixture scale
     — shipped once per executor, never shuffled with the stream) and
@@ -430,9 +396,9 @@ def enriched_segment_agg(
         (F.col("c_custkey") - 1).alias("user_id"), "c_mktsegment"
     )
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "2 hours")
         .join(dim, "user_id")
-        .groupBy(F.window("ts", width).alias("w"), "c_mktsegment")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),

@@ -101,7 +101,7 @@ def test_conformal_mondrian_small_class_predicts_all(spark, tmp_path):
 def test_conformal_quantile_matches_python(spark, sf_correctness):
     """Recompute q = ceil(0.9*(n_cal+1))-th smallest calibration
     nonconformity in plain Python from the same trained weights."""
-    feat, beta = _logistic_train(spark, sf_correctness, rounds=4)
+    feat, beta = _logistic_train(spark, sf_correctness)
     w = beta.collect()[0]
     orders = io.load(spark, sf_correctness, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderdate", "o_orderpriority"

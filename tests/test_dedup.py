@@ -50,9 +50,7 @@ def test_exact_dedup_keeps_min_id(spark, sf_smoke):
 @pytest.mark.parametrize("family", ["xxh64", "md5lin"])
 def test_minhash_catches_exact_dups(spark, sf_smoke, family):
     df = _docs_with_dups(spark, sf_smoke)
-    pairs = dd.minhash_lsh_pairs(
-        df, "text", "doc_id", num_perm=16, bands=4, family=family
-    )
+    pairs = dd.minhash_lsh_pairs(df, "text", "doc_id", family=family)
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     # identical text ⇒ identical signature ⇒ must collide in every band
     for i in range(5):
@@ -61,7 +59,7 @@ def test_minhash_catches_exact_dups(spark, sf_smoke, family):
 
 def test_minhash_jaccard_verify_scores_exact_dups_1(spark, sf_smoke):
     df = _docs_with_dups(spark, sf_smoke)
-    pairs = dd.minhash_lsh_pairs(df, "text", "doc_id", num_perm=16, bands=4)
+    pairs = dd.minhash_lsh_pairs(df, "text", "doc_id")
     verified = dd.jaccard_verify(df, pairs, "text", "doc_id", threshold=0.99)
     got = {(r.id_a, r.id_b): r.jaccard for r in verified.collect()}
     for i in range(5):
@@ -71,9 +69,7 @@ def test_minhash_jaccard_verify_scores_exact_dups_1(spark, sf_smoke):
 @pytest.mark.parametrize("family", ["xxh64", "md5"])
 def test_simhash_exact_dups_hamming_zero(spark, sf_smoke, family):
     df = _docs_with_dups(spark, sf_smoke)
-    pairs = dd.simhash_pairs(
-        df, "text", "doc_id", max_hamming=0, chunks=4, family=family
-    )
+    pairs = dd.simhash_pairs(df, "text", "doc_id", max_hamming=0, family=family)
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     for i in range(5):
         assert (i, i + 100000) in got
@@ -81,7 +77,7 @@ def test_simhash_exact_dups_hamming_zero(spark, sf_smoke, family):
 
 def test_simhash_near_dups_low_hamming(spark, sf_smoke):
     df = _docs_with_dups(spark, sf_smoke)
-    pairs = dd.simhash_pairs(df, "text", "doc_id", max_hamming=16, chunks=4)
+    pairs = dd.simhash_pairs(df, "text", "doc_id", max_hamming=16)
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     hits = sum((i, i + 200000) in got for i in range(5))
     assert hits >= 3, f"only {hits}/5 near-dups within hamming 16"
@@ -91,7 +87,7 @@ def test_lsh_topk_recall(spark, sf_smoke):
     emb = io.load(spark, sf_smoke, "embeddings")
     queries = emb.filter(F.col("vec_id") < 20)
     exact = sim.brute_force_topk(emb, queries, k=5)
-    approx = sim.lsh_topk(emb, queries, k=5, dim=64, n_planes=5, n_tables=6)
+    approx = sim.lsh_topk(emb, queries, n_planes=5, n_tables=6)
     e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
     a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
     recall = len(e & a) / len(e)
@@ -106,7 +102,7 @@ def test_ivf_topk_recall_and_shape(spark, sf_smoke):
     emb = io.load(spark, _ann_dir(sf_smoke), "embeddings")
     queries = emb.filter(F.col("vec_id") < 20)
     exact = sim.brute_force_topk(emb, queries, k=5)
-    approx = sim.ivf_topk(emb, queries, k=5, n_cells=8, n_probe=3)
+    approx = sim.ivf_topk(emb, queries, n_cells=8, n_probe=3)
     e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
     a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
     # probing 3/8 cells: recall must beat the 3/8 random-scan floor
@@ -137,9 +133,7 @@ def test_ivf_sampled_training_recall(spark, sf_smoke):
     emb = io.load(spark, sf_smoke, "embeddings")
     queries = emb.filter(F.col("vec_id") < 20)
     exact = sim.brute_force_topk(emb, queries, k=5)
-    approx = sim.ivf_topk(
-        emb, queries, k=5, n_cells=8, n_probe=3, train_fraction=0.3
-    )
+    approx = sim.ivf_topk(emb, queries, n_cells=8, n_probe=3, train_fraction=0.3)
     e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
     a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
     recall = len(e & a) / len(e)
@@ -148,7 +142,7 @@ def test_ivf_sampled_training_recall(spark, sf_smoke):
     b = {
         (r.query_id, r.neighbor_id)
         for r in sim.ivf_topk(
-            emb, queries, k=5, n_cells=8, n_probe=3, train_fraction=0.3
+            emb, queries, n_cells=8, n_probe=3, train_fraction=0.3
         ).collect()
     }
     assert a == b
@@ -194,8 +188,8 @@ def test_ivf_fit_probe_split_caches_model(spark, sf_smoke, tmp_path, monkeypatch
     # probing a prebuilt model matches inline fit exactly (same params
     # → same deterministic centroids → same neighbor set)
     queries = emb.filter(F.col("vec_id") < 10)
-    probed = sim.ivf_topk(emb, queries, k=5, n_probe=3, model=m3)
-    inline = sim.ivf_topk(emb, queries, k=5, n_cells=4, kmeans_iters=2, n_probe=3)
+    probed = sim.ivf_topk(emb, queries, n_probe=3, model=m3)
+    inline = sim.ivf_topk(emb, queries, n_cells=4, kmeans_iters=2, n_probe=3)
     assert sorted(map(tuple, probed.collect())) == sorted(map(tuple, inline.collect()))
 
 
@@ -221,11 +215,9 @@ def test_fused_minhash_equals_composable_pipeline(spark, sf_correctness, family)
     for both hash families."""
     docs = io.load(spark, sf_correctness, "documents")
     fused = dd.minhash_near_dup_pairs(
-        docs, "text", "doc_id", num_perm=16, bands=4, threshold=0.5, family=family
+        docs, "text", "doc_id", threshold=0.5, family=family
     )
-    pairs = dd.minhash_lsh_pairs(
-        docs, "text", "doc_id", num_perm=16, bands=4, family=family
-    )
+    pairs = dd.minhash_lsh_pairs(docs, "text", "doc_id", family=family)
     composed = dd.jaccard_verify(docs, pairs, "text", "doc_id", threshold=0.5)
     f = sorted((r.id_a, r.id_b, round(r.jaccard, 12)) for r in fused.collect())
     c = sorted((r.id_a, r.id_b, round(r.jaccard, 12)) for r in composed.collect())
@@ -345,14 +337,14 @@ def test_pq_refine_recall_floor(spark, sf_correctness):
     corpus_dir = _ann_dir(sf_correctness)
     emb = io.load(spark, corpus_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    model = sim.pq_fit(emb, m=16, k=16, iters=8, n_train=4096)
+    model = sim.pq_fit(emb, m=16)
     # the REGISTERED query's budget helper — importing it (instead of
     # restating the formula) means a retune can't silently leave this
     # floor pinning a budget the serve no longer uses (r15 review)
     refine = _pq_refine(corpus_dir)
     got = {
         (r.query_id, r.neighbor_id)
-        for r in sim.pq_topk(emb, queries, k=5, model=model, refine=refine).collect()
+        for r in sim.pq_topk(emb, queries, model=model, refine=refine).collect()
     }
     rows = emb.select("vec_id", F.col("embedding").cast("array<double>")).collect()
     ids = np.array([r[0] for r in rows])
@@ -368,7 +360,7 @@ def test_pq_refine_recall_floor(spark, sf_correctness):
     assert recall >= 0.85, f"PQ+refine recall@5 {recall}"
     again = {
         (r.query_id, r.neighbor_id)
-        for r in sim.pq_topk(emb, queries, k=5, model=model, refine=refine).collect()
+        for r in sim.pq_topk(emb, queries, model=model, refine=refine).collect()
     }
     assert got == again, "PQ top-k not deterministic"
 

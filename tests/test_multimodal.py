@@ -25,7 +25,7 @@ def test_media_schema(spark, sf_smoke):
 
 def test_feature_extraction_shape_and_determinism(spark, sf_smoke):
     media = _media(spark, sf_smoke)
-    feats = mm.extract_features(media, n_features=8)
+    feats = mm.extract_features(media)
     rows = feats.collect()
     assert len(rows) == media.count()
     for r in rows[:10]:
@@ -35,7 +35,7 @@ def test_feature_extraction_shape_and_determinism(spark, sf_smoke):
     # deterministic across runs and partitionings
     again = {
         r.media_id: (r.content_md5, tuple(r.feature))
-        for r in mm.extract_features(media.repartition(7), n_features=8).collect()
+        for r in mm.extract_features(media.repartition(7)).collect()
     }
     first = {r.media_id: (r.content_md5, tuple(r.feature)) for r in rows}
     assert first == again
@@ -70,11 +70,11 @@ def test_auto_decode_falls_back_to_fake_on_undecodable_blobs(spark, sf_smoke):
     media = _media(spark, sf_smoke).limit(50)
     fake = {
         r.media_id: tuple(r.feature)
-        for r in mm.extract_features(media, n_features=8, decode="fake").collect()
+        for r in mm.extract_features(media, decode="fake").collect()
     }
     auto = {
         r.media_id: tuple(r.feature)
-        for r in mm.extract_features(media, n_features=8, decode="auto").collect()
+        for r in mm.extract_features(media, decode="auto").collect()
     }
     assert fake == auto
     rz_fake = {
@@ -123,7 +123,7 @@ def test_frame_sample_counts(spark, sf_smoke):
             F.lit(3500).cast("long").alias("duration_ms"),
         ),
     )
-    frames = mm.frame_sample(video, every_ms=1000)
+    frames = mm.frame_sample(video)
     # 0,1000,2000,3000 → 4 frames per video
     assert frames.count() == 20 * 4
     assert frames.columns == ["media_id", "frame_ts_ms"]

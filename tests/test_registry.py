@@ -82,3 +82,47 @@ def test_bench_isolated_subset_of_headline():
     # the main-session watchlist must stay main-session and headline
     assert set(bench.MAIN_BAND_SEC).isdisjoint(bench.ISOLATED)
     assert set(bench.MAIN_BAND_SEC) <= set(bench.HEADLINE)
+
+
+def test_every_default_parameter_is_set_by_some_caller():
+    """A defaulted parameter that no call site passes has one value in
+    use, so it belongs in a constant. Calls match by function name; a
+    call with ``*args`` or ``**kwargs`` counts as setting everything."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    pkg = root / "tda596_lab02mapreduce_spark"
+    files = [root / "bench.py"] + [
+        p for d in (pkg, root / "tests", root / "tools", root / "perfbench")
+        for p in d.rglob("*.py")
+    ]
+    trees = {p: ast.parse(p.read_text()) for p in files}
+    npos, kws, star = {}, {}, set()
+    for node in (n for t in trees.values() for n in ast.walk(t)):
+        if isinstance(node, ast.Call):
+            name = getattr(node.func, "id", getattr(node.func, "attr", None))
+            if any(isinstance(a, ast.Starred) for a in node.args) or any(
+                k.arg is None for k in node.keywords
+            ):
+                star.add(name)
+            npos[name] = max(npos.get(name, 0), len(node.args))
+            kws.setdefault(name, set()).update(k.arg for k in node.keywords)
+    unset = []
+    for path in (p for p in files if pkg in p.parents):
+        for fn in ast.walk(trees[path]):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a, name = fn.args, fn.name
+            pos = a.posonlyargs + a.args
+            skip = 1 if pos and pos[0].arg in ("self", "cls") else 0
+            first = len(pos) - len(a.defaults)
+            defaulted = [(p.arg, i) for i, p in enumerate(pos) if i >= first] + [
+                (p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d
+            ]
+            for arg, i in defaulted:
+                if name in star or arg in kws.get(name, ()):
+                    continue
+                if i is None or npos.get(name, 0) <= i - skip:
+                    unset.append(f"{path.relative_to(root)}::{name}({arg})")
+    assert not unset, f"{len(unset)} defaulted parameters no caller sets: {unset}"

@@ -63,9 +63,6 @@ FITS = {
         lambda spark, sf, refit: sim.pq_fit(
             _emb(spark, sf),
             m=16,
-            k=16,
-            iters=8,
-            n_train=4096,
             dataset_key=sf,
             refit=refit,
         ),

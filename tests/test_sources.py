@@ -46,7 +46,7 @@ def test_parquet_roundtrip_partitioned_and_pruned(spark, sf_smoke, tmp_path):
 def test_csv_roundtrip_with_schema(spark, sf_smoke, tmp_path):
     nation = io.load(spark, sf_smoke, "nation")
     path = str(tmp_path / "nation_csv")
-    sources.write_csv(nation, path)
+    nation.write.mode("overwrite").option("header", "true").csv(path)
     back = sources.read_csv(
         spark, path, schema="n_nationkey int, n_name string, n_regionkey int"
     )

@@ -783,10 +783,23 @@ def test_stream_nb_model_swap_two_version_drain(spark, sf_correctness):
     assert mf["current"] == 2 and mf["versions"] == [1, 2]
 
 
+def test_drain_conf_sizes_from_bytes_and_restores(spark):
+    """A KB-scale drain runs at the 4-partition floor (never above the
+    session setting), and the session value comes back on exit."""
+    from tda596_lab02mapreduce_spark.streaming.windows import drain_conf
+
+    conf = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(conf)
+    with drain_conf(spark, 1024):
+        assert spark.conf.get(conf) == str(min(int(before), 4))
+    assert spark.conf.get(conf) == before
+
+
 @pytest.mark.parametrize("bad", ["abc", "0", "-4", "2.5", " 3"])
 def test_drain_conf_invalid_env_override_falls_back(spark, monkeypatch, bad):
-    """A malformed partition override warns and is ignored: the drain
-    is sized from its input bytes as if the variable were unset."""
+    """The retired SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS variable is not
+    read: whatever it holds, the drain is sized from its input bytes as
+    if it were unset, and the session value comes back on exit."""
     from tda596_lab02mapreduce_spark.streaming.windows import drain_conf
 
     conf = "spark.sql.shuffle.partitions"
@@ -795,13 +808,8 @@ def test_drain_conf_invalid_env_override_falls_back(spark, monkeypatch, bad):
     with drain_conf(spark, 1024):
         derived = spark.conf.get(conf)
     monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", bad)
-    with pytest.warns(RuntimeWarning, match="SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"):
-        with drain_conf(spark, 1024):
-            assert spark.conf.get(conf) == derived
-    assert spark.conf.get(conf) == before
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "3")
     with drain_conf(spark, 1024):
-        assert spark.conf.get(conf) == "3"
+        assert spark.conf.get(conf) == derived
     assert spark.conf.get(conf) == before
 
 
